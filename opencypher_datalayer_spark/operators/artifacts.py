@@ -40,8 +40,8 @@ Two backends, the same seam as ``storage.py``'s ``BACKENDS`` registry:
   pointer + O_EXCL lock. Correct on one host; O_EXCL and ``os.replace``
   read-modify-write degrade on NFS/object storage.
 - ``txnlog`` (:class:`TxnLogArtifactStore`) — Delta-style append-only
-  log: version N is published by creating ``_log/{N:08d}.json`` with a
-  put-if-absent primitive (the NFS-safe hard-link protocol; a
+  log: version N is published by creating ``_log/{N:08d}.json`` with
+  ``storage._put_if_absent`` (the NFS-safe hard-link protocol; a
   conditional put on object storage). The current version is the
   highest log entry, so there is no mutable pointer and no lock, and
   the extension CAS falls out of slot allocation: an extension built
@@ -62,6 +62,8 @@ import tempfile
 import time
 import uuid
 from typing import Callable
+
+from opencypher_datalayer_spark.storage import _link_or_copy, _put_if_absent, _replace_file
 
 _CURRENT = "CURRENT"
 _KEY_FILE = "KEY.json"
@@ -185,11 +187,7 @@ class ArtifactStore:
             vname = f"v{self._max_version(adir) + 1:08d}"
             vdir = os.path.join(adir, vname)
             os.rename(tmp, vdir)
-            # atomic pointer swap (same idiom as storage.py's CURRENT)
-            ptr = os.path.join(adir, f"_cur_{os.getpid()}_{uuid.uuid4().hex[:6]}")
-            with open(ptr, "w") as f:
-                f.write(vname)
-            os.replace(ptr, os.path.join(adir, _CURRENT))
+            _replace_file(os.path.join(adir, _CURRENT), vname)  # atomic pointer swap
             return vdir
         finally:
             self._release_lock(adir)
@@ -287,10 +285,7 @@ class ArtifactStore:
     def _write_key(self, adir: str, kind: str, key: tuple) -> None:
         p = os.path.join(adir, _KEY_FILE)
         if not os.path.exists(p):
-            tmp = p + f".{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump({"kind": kind, "key": repr(key)}, f)
-            os.replace(tmp, p)
+            _replace_file(p, json.dumps({"kind": kind, "key": repr(key)}))
 
     @staticmethod
     def _max_version(adir: str) -> int:
@@ -405,28 +400,6 @@ class TxnLogArtifactStore(ArtifactStore):
         except (OSError, ValueError, KeyError):
             return None
 
-    def _putif(self, adir: str, v: int, dirname: str) -> bool:
-        """Put-if-absent of the version-v log entry. True iff won."""
-        log_dir = self._log_dir(adir)
-        os.makedirs(log_dir, exist_ok=True)
-        tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"version": v, "dir": dirname}, f)
-        target = os.path.join(log_dir, f"{v:08d}.json")
-        try:
-            try:
-                os.link(tmp, target)
-                won = True
-            except FileExistsError:
-                won = False
-            except OSError:
-                # NFS: the link may have succeeded even though the
-                # retried RPC reported an error — nlink is the truth
-                won = os.stat(tmp).st_nlink == 2
-        finally:
-            os.unlink(tmp)
-        return won
-
     # -- publish ----------------------------------------------------------
 
     def _publish(self, adir: str, tmp: str, expected_base) -> str:
@@ -436,6 +409,8 @@ class TxnLogArtifactStore(ArtifactStore):
         dirname = f"d-{uuid.uuid4().hex}_p{os.getpid()}"
         dpath = os.path.join(adir, dirname)
         os.rename(tmp, dpath)
+        log_dir = self._log_dir(adir)
+        os.makedirs(log_dir, exist_ok=True)
         while True:
             cur = self._log_max(adir)
             if expected_base is not _ANY:
@@ -445,7 +420,8 @@ class TxnLogArtifactStore(ArtifactStore):
                     raise ExtensionConflict(
                         f"current version of {adir} moved past {expected_base!r}"
                     )
-            if self._putif(adir, cur + 1, dirname):
+            entry = json.dumps({"version": cur + 1, "dir": dirname})
+            if _put_if_absent(os.path.join(log_dir, f"{cur + 1:08d}.json"), entry):
                 return dpath
 
     # -- reclamation -------------------------------------------------------
@@ -516,11 +492,7 @@ def _link_tree(src: str, dst: str) -> None:
         out = dst if rel == "." else os.path.join(dst, rel)
         os.makedirs(out, exist_ok=True)
         for f in files:
-            s, d = os.path.join(dirpath, f), os.path.join(out, f)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
+            _link_or_copy(os.path.join(dirpath, f), os.path.join(out, f))
 
 
 def _tmp_pid(name: str) -> int:

@@ -12,13 +12,30 @@ fixed.
 On a cluster this role is played by Delta/Iceberg (not on this image);
 the interface is kept small so a Delta-backed implementation can drop in.
 
-Layout::
+Layout (``parquet`` backend)::
 
     root/
       v00000001/nodes/*.parquet
       v00000001/edges/*.parquet
+      v00000001/MANIFEST.json
       v00000002/...
       CURRENT            # text: version number of the live snapshot
+      COMMIT.lock        # O_EXCL writer claim, present only during a commit
+
+Layout (``txnlog`` backend)::
+
+    root/
+      d-<uuid>/nodes/*.parquet   # one immutable data dir per snapshot
+      d-<uuid>/edges/*.parquet
+      d-<uuid>/MANIFEST.json
+      _log/00000001.json         # {"version": 1, "dir": "d-<uuid>"}
+      _log/00000002.json         # current version = highest log entry
+
+Both backends write a snapshot with the same two builders -- a full
+snapshot (``_write_snapshot``) or a pruned MERGE on a base version
+(``_write_merge``) -- into a directory they are handed. A backend is
+only its publish step (``_publish_build``): where that directory lives
+and how it becomes the current version.
 
 Writes are partitioned by ``label`` (nodes) / ``rel_type`` (edges) so
 label scans and per-type edge reads partition-prune (the analog of the
@@ -31,9 +48,9 @@ import glob
 import json
 import os
 import shutil
-import tempfile
 import time
 import uuid
+from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +70,51 @@ _LOCK = "COMMIT.lock"
 # can prune too.
 _STATS_KEY = {"nodes": "gid", "edges": "src"}
 _EXTRA_STATS = {"edges": ["dst"]}
+
+
+# -- file protocol shared with operators/artifacts.py ------------------
+
+
+def _replace_file(path: str, text: str) -> None:
+    """Write ``text`` to a temp file beside ``path`` and ``os.replace`` it
+    over ``path``: readers see the old content or the new, never a part."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def _put_if_absent(path: str, text: str) -> bool:
+    """Create ``path`` holding ``text`` only if it does not exist yet; True
+    iff this call created it. The NFS-safe hard-link protocol (open(2)
+    NOTES): write a unique temp file, ``link()`` it to the target and
+    trust ``st_nlink == 2`` -- correct even when the link RPC's reply is
+    lost and retried. On object storage the same step is a conditional
+    put (If-None-Match)."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        f.write(text)
+    try:
+        try:
+            os.link(tmp, path)
+            return True
+        except FileExistsError:
+            return False
+        except OSError:
+            # NFS: the link may have succeeded even though the retried
+            # RPC reported an error -- nlink is the truth
+            return os.stat(tmp).st_nlink == 2
+    finally:
+        os.unlink(tmp)
+
+
+def _link_or_copy(src: str, dst: str) -> None:
+    """Hard-link an immutable data file into a new snapshot (zero data
+    movement); plain copy when the paths sit on different filesystems."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
 
 
 def _file_key_stats(path: str, keys: list[str]) -> tuple[dict[str, tuple], int]:
@@ -232,7 +294,7 @@ class ParquetGraphStorage:
         return GraphStore(nodes, edges)
 
     def commit(self, store: GraphStore, cluster_buckets: int | None = None) -> int:
-        """Write a new snapshot version and atomically repoint CURRENT.
+        """Write ``store`` as a new snapshot version and publish it.
 
         ``cluster_buckets``: range-partition each table on its key column
         (nodes by ``gid``, edges by ``src``) before writing, so each data
@@ -243,16 +305,40 @@ class ParquetGraphStorage:
         commit, so it's opt-in: the frequent small commits of the sync
         service skip it; periodic compaction / analytic snapshots enable it.
         Footer stats are collected either way (cheap, driver-side).
+
+        The snapshot is built by the caller, not derived from the base
+        version, so it is last-writer-wins: a full sync is authoritative
+        (W10's wipe semantics) and is never rebuilt on a lost race.
         """
+        return self._publish_build(
+            lambda _base, vdir: self._write_snapshot(vdir, store, cluster_buckets),
+            derived=False,
+        )
+
+    def _publish_build(self, build: Callable[[int, str], None], derived: bool = True) -> int:
+        """The ``parquet`` publish step: under the commit lock, let base =
+        the current version, ``build(base, vdir)`` into ``v{base+1}`` and
+        swap CURRENT atomically. ``derived`` is moot here -- the lock
+        already orders the build after every earlier publish."""
         self._acquire_commit_lock()
         try:
-            return self._commit_locked(store, cluster_buckets)
+            v = self.current_version() + 1
+            vdir = self._version_dir(v)
+            # a writer that died before its CURRENT swap leaves v{N+1}
+            # behind; it was never published, so start from empty
+            shutil.rmtree(vdir, ignore_errors=True)
+            build(v - 1, vdir)
+            _replace_file(os.path.join(self.root, _CURRENT), str(v))
+            return v
         finally:
             self._release_commit_lock()
 
-    def _commit_locked(self, store: GraphStore, cluster_buckets: int | None = None) -> int:
-        v = self.current_version() + 1
-        vdir = self._version_dir(v)
+    # -- snapshot builders: write one snapshot into a given directory ----
+
+    def _write_snapshot(
+        self, vdir: str, store: GraphStore, cluster_buckets: int | None = None
+    ) -> None:
+        """Write all of ``store`` into ``vdir`` with its manifest."""
         nodes, edges = store.nodes, store.edges
         if cluster_buckets:
             nodes = nodes.repartitionByRange(cluster_buckets, "gid")
@@ -264,11 +350,6 @@ class ParquetGraphStorage:
             os.path.join(vdir, "edges")
         )
         self._write_manifest(vdir)
-        fd, tmp = tempfile.mkstemp(dir=self.root)
-        with os.fdopen(fd, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, os.path.join(self.root, _CURRENT))  # atomic pointer swap
-        return v
 
     # -- file-skipping manifest (the gid-index analog, C6) -------------
 
@@ -387,37 +468,45 @@ class ParquetGraphStorage:
         ordinary ``apply_batch`` runs on it — bit-identical semantics to
         the full path, just restricted to the files that can change.
         Repeated merges append small un-clustered files; a periodic
-        ``commit(store, cluster_buckets=N)`` is the compaction that
-        re-tightens the ranges (OPTIMIZE's role in a table format).
+        ``compact`` re-tightens the ranges (OPTIMIZE's role in a table
+        format).
 
-        Falls back to a full commit when there is no manifest yet or the
-        batch is too large to key-collect driver-side.
+        The merge is derived from its base version, so when another
+        writer publishes first it is rebuilt on the winner's snapshot:
+        concurrent batches compose and neither is lost (the reference's
+        serialized per-batch transactions, ``neo4j.go:238-284``).
         """
-        self._acquire_commit_lock()
-        try:
-            return self._merge_commit_locked(spark, batch, label, source)
-        finally:
-            self._release_commit_lock()
+        return self._publish_build(
+            lambda base, vdir: self._write_merge(spark, vdir, base, batch, label, source)
+        )
 
-    def _merge_commit_locked(
-        self, spark: SparkSession, batch: DataFrame, label: str, source: str
-    ) -> int:
-        v = self.current_version()
-        manifest = self._manifest(v)
-        if v == 0 or manifest is None:
-            return self._commit_locked(self.load(spark).apply_batch(batch, label, source))
-        keys = batch.select(
+    def _write_merge(
+        self,
+        spark: SparkSession,
+        vdir: str,
+        base: int,
+        batch: DataFrame,
+        label: str,
+        source: str,
+    ) -> None:
+        """Write version ``base`` with ``batch`` applied into ``vdir``:
+        rewrite the files the batch's keys hit, hard-link the rest. Falls
+        back to a full snapshot when ``base`` has no manifest or the batch
+        is too large to key-collect driver-side."""
+        manifest = self._manifest(base)
+        keys = None if manifest is None else batch.select(
             "id", "deleted", F.flatten(F.map_values("refs")).alias("targets")
         ).limit(self.MERGE_MAX_BATCH_ROWS + 1).collect()
-        if len(keys) > self.MERGE_MAX_BATCH_ROWS:
-            return self._commit_locked(self.load(spark).apply_batch(batch, label, source))
+        if keys is None or len(keys) > self.MERGE_MAX_BATCH_ROWS:
+            full = self.load_version(spark, base).apply_batch(batch, label, source)
+            return self._write_snapshot(vdir, full)
         dead = sorted({r["id"] for r in keys if r["deleted"]})
         live = sorted({r["id"] for r in keys if not r["deleted"]})
         targets = sorted(
             {t for r in keys if not r["deleted"] for t in (r["targets"] or [])}
         )
         node_keys = sorted(set(live) | set(dead) | set(targets))
-        vdir = self._version_dir(v)
+        base_dir = self._version_dir(base)
 
         node_hit = {e["path"] for e in _prune(manifest["nodes"], node_keys)}
         edge_hit = {
@@ -426,52 +515,46 @@ class ParquetGraphStorage:
         }
 
         sub = GraphStore(
-            self._read_files(spark, vdir, "nodes", sorted(node_hit)),
-            self._read_files(spark, vdir, "edges", sorted(edge_hit)),
+            self._read_files(spark, base_dir, "nodes", sorted(node_hit)),
+            self._read_files(spark, base_dir, "edges", sorted(edge_hit)),
         )
         merged = sub.apply_batch(batch, label, source)
 
-        new_v = v + 1
-        new_vdir = self._version_dir(new_v)
-        for table, hit in (("nodes", node_hit), ("edges", edge_hit)):
-            for e in manifest[table]:
-                if e["path"] in hit:
-                    continue
-                src_path = os.path.join(vdir, e["path"])
-                dst_path = os.path.join(new_vdir, e["path"])
-                os.makedirs(os.path.dirname(dst_path), exist_ok=True)
-                try:
-                    os.link(src_path, dst_path)  # zero-copy carry-forward
-                except OSError:
-                    shutil.copy2(src_path, dst_path)  # cross-device fallback
-        merged.nodes.write.mode("append").partitionBy("label").parquet(
-            os.path.join(new_vdir, "nodes")
-        )
-        merged.edges.write.mode("append").partitionBy("rel_type").parquet(
-            os.path.join(new_vdir, "edges")
-        )
         carry = {
             e["path"]: e
             for table, hit in (("nodes", node_hit), ("edges", edge_hit))
             for e in manifest[table]
             if e["path"] not in hit
         }
-        self._write_manifest(new_vdir, carry=carry)
-        fd, tmp = tempfile.mkstemp(dir=self.root)
-        with os.fdopen(fd, "w") as f:
-            f.write(str(new_v))
-        os.replace(tmp, os.path.join(self.root, _CURRENT))
-        return new_v
+        for rel in carry:
+            dst_path = os.path.join(vdir, rel)
+            os.makedirs(os.path.dirname(dst_path), exist_ok=True)
+            _link_or_copy(os.path.join(base_dir, rel), dst_path)
+        merged.nodes.write.mode("append").partitionBy("label").parquet(
+            os.path.join(vdir, "nodes")
+        )
+        merged.edges.write.mode("append").partitionBy("rel_type").parquet(
+            os.path.join(vdir, "edges")
+        )
+        self._write_manifest(vdir, carry=carry)
 
     def compact(self, spark: SparkSession, cluster_buckets: int = 8) -> int:
         """Rewrite the current version range-clustered — the OPTIMIZE
         role in a table format. Repeated ``merge_commit``s each append a
         few small files with overlapping key ranges, which slowly erodes
-        manifest pruning selectivity; compaction loads the live snapshot
-        once, range-partitions each table on its merge key, and commits
-        a fresh version whose files cover narrow disjoint ranges (old
-        versions stay readable for time travel until ``vacuum``)."""
-        return self.commit(self.load(spark), cluster_buckets=cluster_buckets)
+        manifest pruning selectivity; compaction reads the base version,
+        range-partitions each table on its merge key, and publishes a
+        fresh version whose files cover narrow disjoint ranges (old
+        versions stay readable for time travel until ``vacuum``).
+
+        Like a merge, compaction is derived from its base version: a
+        batch published between its read and its publish is never
+        dropped -- the compaction is rebuilt on the winner's snapshot."""
+        return self._publish_build(
+            lambda base, vdir: self._write_snapshot(
+                vdir, self.load_version(spark, base), cluster_buckets
+            )
+        )
 
     def file_count(self, table: str, version: int | None = None) -> int:
         v = self.current_version() if version is None else version
@@ -521,23 +604,24 @@ class TxnLogGraphStorage(ParquetGraphStorage):
       (recording the data directory) with a put-if-absent primitive;
       the reader's current version is simply the highest log entry —
       readers never block and never see a partial commit;
-    - put-if-absent is the NFS-safe hard-link protocol (open(2) NOTES:
-      create a unique temp file, ``link()`` it to the target, verify
-      ``st_nlink == 2`` — correct even when the link RPC's reply is
-      lost and retried); on object storage the same slot maps to a
-      conditional put (If-None-Match), which is exactly Delta's
-      commit primitive;
+    - put-if-absent is the NFS-safe hard-link protocol
+      (``_put_if_absent``); on object storage the same slot maps to a
+      conditional put (If-None-Match), which is exactly Delta's commit
+      primitive;
     - a writer that loses the race re-reads the new current version
-      and retries: ``merge_commit`` rebuilds its delta against the
-      winner's snapshot (both batches survive — the reference's
-      serialized per-batch transactions, ``neo4j.go:238-284``), while
-      full ``commit`` re-publishes its self-contained snapshot at the
-      next slot (full sync is authoritative last-writer-wins, as in
-      the base class and W10's wipe semantics).
+      and retries. A build derived from the base version
+      (``merge_commit``, ``compact``) is discarded and rebuilt on the
+      winner's snapshot, so both batches survive (the reference's
+      serialized per-batch transactions, ``neo4j.go:238-284``). A
+      caller-built ``commit(store)`` is self-contained, so it is
+      re-published at the next slot without a rewrite (full sync is
+      authoritative last-writer-wins, as in the base class and W10's
+      wipe semantics).
 
-    Everything above the commit protocol — manifest stats, pruned
-    merge, clustering, compaction, time travel — is inherited
-    unchanged from ``ParquetGraphStorage``.
+    Everything above the commit protocol — the snapshot builders,
+    manifest stats, pruned merge, clustering, compaction, time travel —
+    is inherited unchanged from ``ParquetGraphStorage``; this class
+    overrides only versions, directories, the log and its publish step.
     """
 
     _LOG = "_log"
@@ -578,44 +662,35 @@ class TxnLogGraphStorage(ParquetGraphStorage):
     def _publish(self, v: int, dirname: str) -> bool:
         """Put-if-absent of the version-v log entry. True iff this
         writer won slot v."""
-        log_dir = os.path.join(self.root, self._LOG)
-        tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"version": v, "dir": dirname}, f)
-        target = self._log_path(v)
-        try:
-            try:
-                os.link(tmp, target)
-                won = True
-            except FileExistsError:
-                won = False
-            except OSError:
-                # NFS: the link may have succeeded even though the
-                # retried RPC reported an error — nlink is the truth
-                won = os.stat(tmp).st_nlink == 2
-        finally:
-            os.unlink(tmp)
-        return won
+        return _put_if_absent(
+            self._log_path(v), json.dumps({"version": v, "dir": dirname})
+        )
 
     # -- commits ---------------------------------------------------------
 
-    def _write_snapshot(
-        self, store: GraphStore, cluster_buckets: int | None = None
-    ) -> str:
-        dirname = f"d-{uuid.uuid4().hex}"
-        vdir = os.path.join(self.root, dirname)
-        nodes, edges = store.nodes, store.edges
-        if cluster_buckets:
-            nodes = nodes.repartitionByRange(cluster_buckets, "gid")
-            edges = edges.repartitionByRange(cluster_buckets, "src")
-        nodes.write.mode("overwrite").partitionBy("label").parquet(
-            os.path.join(vdir, "nodes")
-        )
-        edges.write.mode("overwrite").partitionBy("rel_type").parquet(
-            os.path.join(vdir, "edges")
-        )
-        self._write_manifest(vdir)
-        return dirname
+    def _publish_build(self, build: Callable[[int, str], None], derived: bool = True) -> int:
+        """The ``txnlog`` publish step: ``build(base, vdir)`` into a fresh
+        ``d-<uuid>`` (expensive, uncoordinated), then put log slot
+        ``base+1``. On a lost race a ``derived`` build is discarded and
+        rebuilt on the winner's snapshot; otherwise the same self-contained
+        directory is re-published at the next slot."""
+
+        def build_new(base: int) -> str:
+            dirname = f"d-{uuid.uuid4().hex}"
+            build(base, os.path.join(self.root, dirname))
+            return dirname
+
+        base = self.current_version()
+        dirname = build_new(base)
+        while True:
+            if not self._touch_publish_dir(dirname):
+                dirname = build_new(base)  # collected by GC during a long stall
+            if self._publish(base + 1, dirname):
+                return self._finalize_publish(base + 1, dirname, lambda: build_new(base))
+            base = self.current_version()
+            if derived:
+                shutil.rmtree(os.path.join(self.root, dirname), ignore_errors=True)
+                dirname = build_new(base)
 
     def _touch_publish_dir(self, dirname: str) -> bool:
         """Restart ``gc_orphans``' min-age clock on the about-to-publish
@@ -637,112 +712,11 @@ class TxnLogGraphStorage(ParquetGraphStorage):
         means no other writer ever writes slot ``v``."""
         if os.path.isdir(os.path.join(self.root, dirname)):
             return v
-        new_dir = rebuild()
-        tmp = os.path.join(self.root, self._LOG, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"version": v, "dir": new_dir}, f)
-        os.replace(tmp, self._log_path(v))
+        _replace_file(
+            self._log_path(v), json.dumps({"version": v, "dir": rebuild()})
+        )
         self._dir_cache.pop(v, None)
         return v
-
-    def commit(self, store: GraphStore, cluster_buckets: int | None = None) -> int:
-        # data first (expensive, uncoordinated), then CAS-publish the
-        # log entry; on a lost race the snapshot is still self-contained
-        # and valid, so only the (cheap) publish retries
-        dirname = self._write_snapshot(store, cluster_buckets)
-        rebuild = lambda: self._write_snapshot(store, cluster_buckets)
-        while True:
-            v = self.current_version() + 1
-            if not self._touch_publish_dir(dirname):
-                dirname = rebuild()  # collected by GC during a long stall
-            if self._publish(v, dirname):
-                return self._finalize_publish(v, dirname, rebuild)
-
-    def merge_commit(
-        self, spark: SparkSession, batch: DataFrame, label: str, source: str
-    ) -> int:
-        # optimistic concurrency: build the delta against the current
-        # snapshot, publish; a lost race discards the built directory
-        # and rebuilds against the winner's version, so concurrent
-        # batches compose instead of overwriting each other
-        while True:
-            base_v = self.current_version()
-            manifest = self._manifest(base_v)
-            if base_v == 0 or manifest is None:
-                merged = self.load(spark).apply_batch(batch, label, source)
-                build = lambda m=merged: self._write_snapshot(m)
-            else:
-                build = lambda b=base_v, m=manifest: self._build_merge_dir(
-                    spark, batch, label, source, b, m
-                )
-            dirname = build()
-            if not self._touch_publish_dir(dirname):
-                dirname = build()  # collected by GC during a long stall
-            if self._publish(base_v + 1, dirname):
-                return self._finalize_publish(base_v + 1, dirname, build)
-            shutil.rmtree(os.path.join(self.root, dirname), ignore_errors=True)
-
-    def _build_merge_dir(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        label: str,
-        source: str,
-        v: int,
-        manifest: dict,
-    ) -> str:
-        """The pruned-MERGE body of the base class, writing into a
-        uniquely-named directory instead of ``v{N+1}`` (same file
-        selection, same carry-forward links, same apply_batch)."""
-        keys = batch.select(
-            "id", "deleted", F.flatten(F.map_values("refs")).alias("targets")
-        ).limit(self.MERGE_MAX_BATCH_ROWS + 1).collect()
-        if len(keys) > self.MERGE_MAX_BATCH_ROWS:
-            return self._write_snapshot(self.load(spark).apply_batch(batch, label, source))
-        dead = sorted({r["id"] for r in keys if r["deleted"]})
-        live = sorted({r["id"] for r in keys if not r["deleted"]})
-        targets = sorted(
-            {t for r in keys if not r["deleted"] for t in (r["targets"] or [])}
-        )
-        node_keys = sorted(set(live) | set(dead) | set(targets))
-        vdir = self._version_dir(v)
-        node_hit = {e["path"] for e in _prune(manifest["nodes"], node_keys)}
-        edge_hit = {
-            e["path"]
-            for e in _prune_edge_files(manifest["edges"], live + dead, dead)
-        }
-        sub = GraphStore(
-            self._read_files(spark, vdir, "nodes", sorted(node_hit)),
-            self._read_files(spark, vdir, "edges", sorted(edge_hit)),
-        )
-        merged = sub.apply_batch(batch, label, source)
-        dirname = f"d-{uuid.uuid4().hex}"
-        new_vdir = os.path.join(self.root, dirname)
-        for table, hit in (("nodes", node_hit), ("edges", edge_hit)):
-            for e in manifest[table]:
-                if e["path"] in hit:
-                    continue
-                src_path = os.path.join(vdir, e["path"])
-                dst_path = os.path.join(new_vdir, e["path"])
-                os.makedirs(os.path.dirname(dst_path), exist_ok=True)
-                try:
-                    os.link(src_path, dst_path)  # zero-copy carry-forward
-                except OSError:
-                    shutil.copy2(src_path, dst_path)
-        merged.nodes.write.mode("append").partitionBy("label").parquet(
-            os.path.join(new_vdir, "nodes")
-        )
-        merged.edges.write.mode("append").partitionBy("rel_type").parquet(
-            os.path.join(new_vdir, "edges")
-        )
-        carry = {
-            e["path"]: e
-            for table, hit in (("nodes", node_hit), ("edges", edge_hit))
-            for e in manifest[table]
-            if e["path"] not in hit
-        }
-        self._write_manifest(new_vdir, carry=carry)
-        return dirname
 
     def vacuum(self, keep: int = 2) -> None:
         """Drop data directories (and their log entries) older than the
@@ -779,8 +753,6 @@ class TxnLogGraphStorage(ParquetGraphStorage):
         its own log entry if GC got it anyway (``_finalize_publish``).
         A stalled writer therefore never leaves a dangling published
         version. Returns the removed directory names."""
-        import time
-
         referenced: set[str] = set()
         log_dir = os.path.join(self.root, self._LOG)
         for name in os.listdir(log_dir):

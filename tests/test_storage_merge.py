@@ -402,3 +402,88 @@ def test_txnlog_crash_between_write_and_publish(spark, tmp_path, monkeypatch):
     assert removed[0] not in (_os.path.basename(fresh._version_dir(v)) for v in (1, 2))
     assert fresh.current_version() == 2
     assert _snapshot(spark, fresh, 2)[0] == nodes2
+
+
+def test_parquet_crash_before_current_swap_does_not_wedge(spark, tmp_path, monkeypatch):
+    """A writer that dies after writing v{N+1}/ but before the CURRENT
+    swap leaves that directory behind, unpublished. The next merge must
+    rebuild v{N+1} from scratch: it succeeds, the crashed batch is not in
+    it, and no gid appears twice (carry-forward links must not collide
+    with the leftover files)."""
+    import os as _os
+
+    root = str(tmp_path / "p")
+    storage = _seed(spark, root, n=12, buckets=3)
+    real_replace = _os.replace
+
+    def crash_at_swap(src, dst, *a, **kw):
+        if _os.path.basename(dst) == "CURRENT":
+            raise KeyboardInterrupt
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(_os, "replace", crash_at_swap)
+    b = _batch(spark, [{"id": f"{NS}/crash", "props": {}, "refs": {}}])
+    with pytest.raises(KeyboardInterrupt):
+        storage.merge_commit(spark, b, "P", "s")
+    monkeypatch.undo()
+    assert storage.current_version() == 1
+    assert _os.path.isdir(storage._version_dir(2))  # the unpublished leftover
+
+    b2 = _batch(spark, [{"id": f"{NS}/n0003", "props": {f"{NS}/name": "after"}, "refs": {}}])
+    assert storage.merge_commit(spark, b2, "P", "s") == 2
+    gids = [r.gid for r in storage.load(spark).nodes.collect()]
+    assert f"{NS}/crash" not in gids
+    assert len(gids) == len(set(gids)) == 12
+
+
+def test_compact_keeps_batch_merged_during_compaction(spark, tmp_path, backend, monkeypatch):
+    """A merge that lands between compaction's read of the base version
+    and its publish must survive the compaction: compaction is derived
+    from its base, so it is ordered after the merge or rebuilt on it."""
+    import os as _os
+    import threading
+
+    root = str(tmp_path / "cm")
+    storage = _seed(spark, root, n=12, buckets=3, backend=backend)
+    other = open_storage(root, backend)  # a second writer on the same root
+    lock = _os.path.join(root, "COMMIT.lock")
+    settled = threading.Event()  # the merge landed, or waits behind compaction
+    errs = []
+
+    real_acquire = other._acquire_commit_lock
+
+    def acquire(*a, **kw):
+        if _os.path.exists(lock):  # compaction holds the lock: merge queues
+            settled.set()
+        return real_acquire(*a, **kw)
+
+    monkeypatch.setattr(other, "_acquire_commit_lock", acquire)
+
+    def merge():
+        try:
+            b = _batch(spark, [{"id": f"{NS}/raced", "props": {}, "refs": {}}])
+            other.merge_commit(spark, b, "P", "s")
+        except Exception as exc:  # pragma: no cover - surfaced below
+            errs.append(exc)
+        settled.set()
+
+    writer = threading.Thread(target=merge)
+    real_load = storage.load_version
+
+    def load_then_race(spark_, v):
+        loaded = real_load(spark_, v)
+        if not writer.is_alive() and not settled.is_set():
+            writer.start()
+            assert settled.wait(timeout=300)
+        return loaded
+
+    monkeypatch.setattr(storage, "load_version", load_then_race)
+    storage.compact(spark, cluster_buckets=3)
+    writer.join(timeout=300)
+    monkeypatch.undo()
+    assert not writer.is_alive()
+    assert not errs, errs
+    assert storage.current_version() == 3
+    gids = {r.gid for r in storage.load(spark).nodes.collect()}
+    assert f"{NS}/raced" in gids
+    assert {f"{NS}/n{i:04d}" for i in range(12)} <= gids

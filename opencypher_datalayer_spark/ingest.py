@@ -53,8 +53,9 @@ class DatasetConfig:
 class DatasetWriter:
     """Buffers entities and applies them in micro-batches (W1/W2).
 
-    One flush == one ``GraphStore.apply_batch`` == the reference's
-    per-batch transaction.
+    One flush == one batch applied atomically == the reference's
+    per-batch transaction: a ``storage.merge_commit`` with durable
+    storage, a ``GraphStore.apply_batch`` in memory.
     """
 
     def __init__(self, layer: "DataLayer", dataset: DatasetConfig):

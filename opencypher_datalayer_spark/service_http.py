@@ -50,13 +50,32 @@ def _expand(value: str, ns: dict[str, str]) -> str:
     return value
 
 
+def _check_entity(obj) -> None:
+    """Reject a malformed entity with ``ValueError`` (a 400): an object
+    with a string ``id``, object ``props`` and ``refs``, and ref values
+    that are a string or a list of strings."""
+    if not isinstance(obj, dict):
+        raise ValueError(f"entity must be a JSON object, got {obj!r}")
+    if not isinstance(obj.get("id"), str):
+        raise ValueError(f"entity id must be a string, got {obj.get('id')!r}")
+    for key in ("props", "refs"):
+        if not isinstance(obj.get(key) or {}, dict):
+            raise ValueError(f"entity {key} must be a JSON object, got {obj[key]!r}")
+    for k, v in (obj.get("refs") or {}).items():
+        if not (isinstance(v, str) or (isinstance(v, list) and all(isinstance(t, str) for t in v))):
+            raise ValueError(f"invalid reference value for {k!r}: {v!r}")
+
+
 def _parse_entity_body(body: list) -> list[dict]:
     ns: dict[str, str] = {}
     out = []
     for obj in body:
-        oid = obj.get("id")
+        _check_entity(obj)
+        oid = obj["id"]
         if oid == "@context":
             ns = obj.get("namespaces", {}) or {}
+            if not isinstance(ns, dict) or not all(isinstance(u, str) for u in ns.values()):
+                raise ValueError(f"@context namespaces must map prefixes to URIs, got {ns!r}")
             continue
         if oid == "@continuation":
             continue

@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opencypher_datalayer_spark.model import EDGES_SCHEMA, NODES_SCHEMA
-from opencypher_datalayer_spark.store import GraphStore
+from opencypher_datalayer_spark.store import CollectedBatch, GraphStore
 
 _CURRENT = "CURRENT"
 _MANIFEST = "MANIFEST.json"
@@ -464,12 +464,19 @@ class ParquetGraphStorage:
           tombstone detach, new edges) or whose dst range admits a
           tombstoned id (detach removes edges in either direction).
 
-        The selected subset is loaded as a miniature GraphStore and the
-        ordinary ``apply_batch`` runs on it — bit-identical semantics to
-        the full path, just restricted to the files that can change.
-        Repeated merges append small un-clustered files; a periodic
-        ``compact`` re-tightens the ranges (OPTIMIZE's role in a table
-        format).
+        The batch is collected to the driver once (``CollectedBatch``, at
+        most ``MERGE_MAX_BATCH_ROWS`` distinct gids; a larger batch, or a
+        base without a manifest, takes the full ``apply_batch`` +
+        full-snapshot path). The selected subset is loaded as a
+        miniature GraphStore and ``GraphStore.apply_collected`` applies
+        the batch to it from driver-side key sets: one lookup of the hit
+        node files, then one write per table whose only joins are
+        broadcasts of driver-built key frames. It is a second body of
+        ``apply_batch``'s semantics, so any change to either must keep
+        the differential test against the full path passing
+        (``tests/test_store_properties.py``). Repeated merges append
+        small un-clustered files; a periodic ``compact`` re-tightens the
+        ranges (OPTIMIZE's role in a table format).
 
         The merge is derived from its base version, so when another
         writer publishes first it is rebuilt on the winner's snapshot:
@@ -494,18 +501,14 @@ class ParquetGraphStorage:
         back to a full snapshot when ``base`` has no manifest or the batch
         is too large to key-collect driver-side."""
         manifest = self._manifest(base)
-        keys = None if manifest is None else batch.select(
-            "id", "deleted", F.flatten(F.map_values("refs")).alias("targets")
-        ).limit(self.MERGE_MAX_BATCH_ROWS + 1).collect()
-        if keys is None or len(keys) > self.MERGE_MAX_BATCH_ROWS:
+        collected = None if manifest is None else CollectedBatch.collect(
+            batch, self.MERGE_MAX_BATCH_ROWS
+        )
+        if collected is None:
             full = self.load_version(spark, base).apply_batch(batch, label, source)
             return self._write_snapshot(vdir, full)
-        dead = sorted({r["id"] for r in keys if r["deleted"]})
-        live = sorted({r["id"] for r in keys if not r["deleted"]})
-        targets = sorted(
-            {t for r in keys if not r["deleted"] for t in (r["targets"] or [])}
-        )
-        node_keys = sorted(set(live) | set(dead) | set(targets))
+        dead, live = collected.dead, list(collected.live)
+        node_keys = dead + live + collected.targets
         base_dir = self._version_dir(base)
 
         node_hit = {e["path"] for e in _prune(manifest["nodes"], node_keys)}
@@ -518,7 +521,7 @@ class ParquetGraphStorage:
             self._read_files(spark, base_dir, "nodes", sorted(node_hit)),
             self._read_files(spark, base_dir, "edges", sorted(edge_hit)),
         )
-        merged = sub.apply_batch(batch, label, source)
+        merged = sub.apply_collected(collected, label, source)
 
         carry = {
             e["path"]: e

@@ -11,7 +11,17 @@ itself, and file/partition pruning plays the index's role).
 
 Here each template is a set-oriented DataFrame transform; one
 ``apply_batch`` call is the atomic unit the reference's per-batch
-transaction was.
+transaction was. The same semantics has two bodies:
+
+- ``apply_batch``, the full/bulk path: the batch stays a DataFrame, so
+  it scales to any batch size. The in-memory ``DataLayer``, bulk loads
+  and the storage layer's over-budget fallback run it.
+- ``apply_collected``, the served merge: a batch small enough to
+  collect (``CollectedBatch``) is resolved on the driver into key sets,
+  so a commit pays a few Spark jobs instead of a pipeline of
+  store-derived broadcasts. ``storage.merge_commit`` runs it on the
+  files the batch's keys hit, and it is differential-tested against
+  ``apply_batch`` (``tests/test_store_properties.py``).
 
 Scale notes (100 TB, 1000 executors):
 
@@ -34,6 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from opencypher_datalayer_spark.functions.localframe import local_df
 from opencypher_datalayer_spark.functions.uri import strip_prop_keys, uri_localname
 from opencypher_datalayer_spark.model import EDGES_SCHEMA, NODES_SCHEMA
 
@@ -198,6 +209,58 @@ class GraphStore:
 
         return GraphStore(nodes, edges)
 
+    def apply_collected(self, batch: "CollectedBatch", label: str, source: str) -> "GraphStore":
+        """``apply_batch`` for a batch already resolved on the driver: the
+        same C1-C4 result, built from key sets instead of batch lineage.
+
+        One lookup of ``(gid, labels)`` for the live gids and reference
+        targets gives the prior label sets (``SET n:%s`` accumulates,
+        ``neo4j.go:107``) and which targets exist. Every other step is a
+        broadcast anti-join against a driver-built key frame, unioned
+        with one driver-built frame of new rows, so neither table's
+        plan re-reads the store to derive its broadcasts. Key frames go
+        to the JVM as one Arrow batch each: py4j round trips per call
+        stay O(1), not O(keys).
+        """
+        spark = self.nodes.sparkSession
+
+        def keys(gids) -> DataFrame:
+            return local_df(spark, [(g,) for g in gids], "gid string", n_slices=1)
+
+        found = (
+            self.nodes.join(
+                F.broadcast(keys(set(batch.live) | set(batch.targets))), "gid", "left_semi"
+            )
+            .select("gid", labels_expr(self.nodes).alias("labels"))
+            .collect()
+        )
+        prior = {r["gid"]: r["labels"] for r in found}
+
+        dead = set(batch.dead)
+        # C2 rows: the prior label set plus this batch's label
+        rows = [
+            (g, label, sorted(set(prior.get(g) or ()) | {label}), source, props)
+            for g, props in batch.live.items()
+        ]
+        # C3 stubs: a target is missing unless it is live or it is in the
+        # store and not tombstoned by this batch
+        rows += [
+            (t, None, [], None, {})
+            for t in batch.targets
+            if t not in batch.live and (t in dead or t not in prior)
+        ]
+        touched = keys(batch.dead + list(batch.live))
+        nodes = _anti_by_gid(self.nodes, touched).unionByName(
+            local_df(spark, rows, NODES_SCHEMA, n_slices=1)
+        )
+        # C1 detach + C2 outgoing-edge clear, then C4's new edges
+        edges = _detach_edges(self.edges, touched, keys(batch.dead)).unionByName(
+            local_df(
+                spark, [(s, r, d, source) for s, r, d in batch.edges], EDGES_SCHEMA, n_slices=1
+            )
+        )
+        return GraphStore(nodes, edges)
+
     def delete_all(self, label: str, source: str) -> "GraphStore":
         """C5 filtered bulk delete (full-sync wipe, ``neo4j.go:125-127``):
         drop every node with this label AND source, detaching its edges."""
@@ -243,12 +306,71 @@ def _dedup_keep_last(batch: DataFrame) -> DataFrame:
     )
 
 
+@dataclass(frozen=True)
+class CollectedBatch:
+    """One deduplicated entity batch on the driver, as the key sets
+    ``GraphStore.apply_collected`` applies:
+
+    - ``dead``: tombstoned gids;
+    - ``live``: upserted gid -> props, keys stripped to URI local names;
+    - ``edges``: ``(src, rel_type, dst)`` of the live entities' refs,
+      deduplicated (MERGE, ``neo4j.go:116-123``);
+    - ``targets``: the distinct ``dst`` of ``edges``, each needing a node.
+    """
+
+    dead: list[str]
+    live: dict[str, dict | None]
+    edges: list[tuple[str, str, str]]
+    targets: list[str]
+
+    @staticmethod
+    def collect(batch: DataFrame, max_rows: int) -> "CollectedBatch | None":
+        """Collect ``_dedup_keep_last(batch)`` in one Spark action, through
+        the column helpers ``apply_batch`` projects with; ``None`` when the
+        batch holds more than ``max_rows`` distinct gids."""
+        rows = (
+            _dedup_keep_last(batch)
+            .select(
+                "id",
+                "deleted",
+                strip_prop_keys("props").alias("props"),
+                F.transform(
+                    F.map_entries("refs"),
+                    lambda e: F.struct(
+                        uri_localname(e["key"]).alias("rel"), e["value"].alias("dsts")
+                    ),
+                ).alias("refs"),
+            )
+            .limit(max_rows + 1)
+            .collect()
+        )
+        if len(rows) > max_rows:
+            return None
+        dead = [r["id"] for r in rows if r["deleted"]]
+        live = {r["id"]: r["props"] for r in rows if not r["deleted"]}
+        edges = list(
+            dict.fromkeys(
+                (r["id"], ref["rel"], dst)
+                for r in rows
+                if not r["deleted"]
+                for ref in r["refs"] or ()
+                for dst in ref["dsts"] or ()
+            )
+        )
+        targets = list(dict.fromkeys(dst for _, _, dst in edges))
+        return CollectedBatch(dead, live, edges, targets)
+
+
 def _anti_by_gid(nodes: DataFrame, gids: DataFrame) -> DataFrame:
     return nodes.join(F.broadcast(gids), "gid", "left_anti")
 
 
-def _detach_edges(edges: DataFrame, gids: DataFrame) -> DataFrame:
-    """Remove every edge incident (either direction) to the given gids."""
+def _detach_edges(
+    edges: DataFrame, gids: DataFrame, dst_gids: DataFrame | None = None
+) -> DataFrame:
+    """Remove every edge whose src is in ``gids`` or whose dst is in
+    ``dst_gids`` (default ``gids``: every edge incident to them)."""
+    dst_gids = gids if dst_gids is None else dst_gids
     return edges.join(
         F.broadcast(gids.withColumnRenamed("gid", "src")), "src", "left_anti"
-    ).join(F.broadcast(gids.withColumnRenamed("gid", "dst")), "dst", "left_anti")
+    ).join(F.broadcast(dst_gids.withColumnRenamed("gid", "dst")), "dst", "left_anti")

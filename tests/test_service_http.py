@@ -158,6 +158,30 @@ def test_uda_sync_and_readback(service):
     assert status == 400
 
 
+@pytest.mark.parametrize(
+    "entity",
+    [
+        {"id": "ex:x", "refs": {"ex:r": 42}},  # ref value not a URI
+        {"props": {"ex:name": "no id"}},  # no id
+        "ex:x",  # not an object
+        {"id": "ex:x", "props": [1]},  # props not an object
+        {"id": "ex:x", "refs": ["ex:y"]},  # refs not an object
+        {"id": "ex:x", "refs": {"ex:r": ["ex:y", 3]}},  # non-URI list item
+        {"id": "@context", "namespaces": ["ex"]},  # namespaces not an object
+    ],
+)
+def test_malformed_entity_body_is_400_and_commits_nothing(service, entity):
+    """A malformed entity is the client's error (400, not 500), and the
+    batch is rejected whole: no version is published."""
+    storage = service.layer._storage
+    before = storage.current_version()
+    status, body = _req(
+        service.port, "/datasets/people/entities", body=[CONTEXT, _fixture_entity(1), entity]
+    )
+    assert status == 400, body
+    assert storage.current_version() == before
+
+
 def test_http_hot_reload_and_config_validation(spark, tmp_path):
     """S2 over the wire: editing the config file is visible on the next
     request; a malformed edit surfaces as a 400 (reference BadParameter,

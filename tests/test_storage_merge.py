@@ -61,13 +61,18 @@ def _files(storage, v):
     }
 
 
-def _snapshot(spark, storage, v):
-    s = storage.load_version(spark, v)
+def _rows(store):
+    """Full node rows (label SET included) and the edge set."""
     return (
-        {(r["gid"], r["label"], r["source"], tuple(sorted(r["props"].items())))
-         for r in s.nodes.collect()},
-        {(r["src"], r["rel_type"], r["dst"], r["source"]) for r in s.edges.collect()},
+        {(r["gid"], r["label"], tuple(r["labels"]), r["source"],
+          tuple(sorted(r["props"].items())))
+         for r in store.nodes.collect()},
+        {(r["src"], r["rel_type"], r["dst"], r["source"]) for r in store.edges.collect()},
     )
+
+
+def _snapshot(spark, storage, v):
+    return _rows(storage.load_version(spark, v))
 
 
 def test_small_batch_rewrites_strict_subset(spark, tmp_path, backend):
@@ -129,23 +134,12 @@ def test_merge_chain_matches_full_path(spark, tmp_path, backend):
         bdf = _batch(spark, b)
         shadow = shadow.apply_batch(bdf, "P", "s").checkpointed()
         storage.merge_commit(spark, bdf, "P", "s")
-    got = _snapshot(spark, storage, storage.current_version())
-    want = (
-        {(r["gid"], r["label"], r["source"], tuple(sorted(r["props"].items())))
-         for r in shadow.nodes.collect()},
-        {(r["src"], r["rel_type"], r["dst"], r["source"]) for r in shadow.edges.collect()},
-    )
-    assert got == want
+    assert _snapshot(spark, storage, storage.current_version()) == _rows(shadow)
 
 
 def _snapshot_of(spark, storage, batch):
     """What the FULL path would produce from the current snapshot."""
-    full = storage.load(spark).apply_batch(batch, "P", "s")
-    return (
-        {(r["gid"], r["label"], r["source"], tuple(sorted(r["props"].items())))
-         for r in full.nodes.collect()},
-        {(r["src"], r["rel_type"], r["dst"], r["source"]) for r in full.edges.collect()},
-    )
+    return _rows(storage.load(spark).apply_batch(batch, "P", "s"))
 
 
 def test_compact_shrinks_files_preserves_data(spark, tmp_path, backend):
@@ -487,3 +481,34 @@ def test_compact_keeps_batch_merged_during_compaction(spark, tmp_path, backend, 
     gids = {r.gid for r in storage.load(spark).nodes.collect()}
     assert f"{NS}/raced" in gids
     assert {f"{NS}/n{i:04d}" for i in range(12)} <= gids
+
+
+def test_merge_commit_job_count_is_pinned(spark, tmp_path):
+    """One small merge runs a fixed handful of Spark jobs: the batch
+    collect, one lookup of the hit node files and one write per table,
+    each write broadcasting driver-built key frames. The count is
+    deterministic, so a per-merge fixed cost creeping back (store-derived
+    broadcasts, a re-run batch lineage) fails here, not only in a
+    benchmark. The merge that ran ``apply_batch`` on the subset took 18
+    jobs on this batch."""
+    storage = _seed(spark, str(tmp_path / "j"))
+    batch = _batch(
+        spark,
+        [
+            {"id": f"{NS}/n0003", "props": {f"{NS}/name": "x"},
+             "refs": {f"{NS}/next": [f"{NS}/n0007", f"{NS}/new"]}},
+            {"id": f"{NS}/n0009", "deleted": True},
+            {"id": f"{NS}/fresh", "props": {}, "refs": {f"{NS}/next": f"{NS}/n0009"}},
+        ],
+    )
+    expected = _snapshot_of(spark, storage, batch)
+    sc = spark.sparkContext
+    group = f"merge-job-count-{tmp_path.name}"
+    sc.setJobGroup(group, "merge_commit job count")
+    try:
+        storage.merge_commit(spark, batch, "P", "s")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 10, jobs
+    assert _snapshot(spark, storage, 2) == expected

@@ -7,12 +7,20 @@ last-occurrence-wins within a batch, wholesale property replace,
 outgoing-edge clear on upsert, stub creation, detach delete. Hypothesis
 drives random batch sequences through both the model and
 ``GraphStore.apply_batch`` and demands identical graphs.
+
+A second property holds the served merge to the full path: the same
+batch sequences through ``storage.merge_commit`` (the key-set body,
+``GraphStore.apply_collected``, on the files the batch hits) and
+through ``apply_batch`` must give identical graphs, label sets included.
 """
 
-from hypothesis import HealthCheck, given, settings
+import uuid
+
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from opencypher_datalayer_spark.model import ENTITY_SCHEMA, normalize_entity
+from opencypher_datalayer_spark.storage import open_storage
 from opencypher_datalayer_spark.store import GraphStore
 
 GIDS = [f"g{i}" for i in range(6)]
@@ -87,6 +95,15 @@ class Model:
                     self.edges.add((e["id"], _strip(ref), t, source))
 
 
+def _entity_df(spark, batch):
+    rows = []
+    for i, e in enumerate(batch):
+        r = normalize_entity(e)
+        r["_seq"] = i
+        rows.append(r)
+    return spark.createDataFrame(rows, ENTITY_SCHEMA)
+
+
 @settings(
     # 6 examples ≈ 30 s of Spark batch chains — half the prior 12; the
     # model has been stable for many rounds and the driver's verify
@@ -102,13 +119,7 @@ def test_store_matches_model(spark, batches):
     store = GraphStore.empty(spark)
     for batch in batches:
         model.apply_batch(batch, label="P", source="s")
-        rows = []
-        for i, e in enumerate(batch):
-            r = normalize_entity(e)
-            r["_seq"] = i
-            rows.append(r)
-        df = spark.createDataFrame(rows, ENTITY_SCHEMA)
-        store = store.apply_batch(df, label="P", source="s").checkpointed()
+        store = store.apply_batch(_entity_df(spark, batch), label="P", source="s").checkpointed()
 
     got_nodes = {
         r["gid"]: {"label": r["label"], "source": r["source"], "props": dict(r["props"])}
@@ -119,3 +130,89 @@ def test_store_matches_model(spark, batches):
     }
     assert got_nodes == model.nodes
     assert got_edges == model.edges
+
+
+# two datasets with different labels, so label-set accumulation shows;
+# None prop values ride along
+DATASETS = [("P", "s"), ("Q", "t")]
+merge_entity_st = st.fixed_dictionaries(
+    {
+        "id": st.sampled_from(GIDS),
+        "props": st.dictionaries(
+            st.sampled_from(PROP_KEYS), st.sampled_from(["a", "7", None]), max_size=2
+        ),
+        "refs": st.dictionaries(
+            st.sampled_from(REF_KEYS),
+            st.lists(st.sampled_from(GIDS), min_size=1, max_size=2, unique=True),
+            max_size=2,
+        ),
+        "deleted": st.booleans(),
+    }
+)
+merge_batches_st = st.lists(
+    st.tuples(st.sampled_from(DATASETS), st.lists(merge_entity_st, min_size=1, max_size=5)),
+    min_size=1,
+    max_size=3,
+)
+
+
+def _ent(gid, props=None, refs=None, deleted=False):
+    return {"id": gid, "props": props or {}, "refs": refs or {}, "deleted": deleted}
+
+
+def _graph(store):
+    return (
+        {
+            (r["gid"], r["label"], tuple(r["labels"]), r["source"],
+             tuple(sorted((r["props"] or {}).items())))
+            for r in store.nodes.collect()
+        },
+        {(r["src"], r["rel_type"], r["dst"], r["source"]) for r in store.edges.collect()},
+    )
+
+
+@settings(
+    # each example is a seeded commit plus 1-3 merges and the full path
+    # beside them (~10 s); the explicit example covers the listed edge
+    # cases on every run
+    max_examples=2,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(batches=merge_batches_st)
+@example(
+    batches=[
+        (
+            ("Q", "t"),
+            [
+                # self-loop, a None prop, a new stub; g0 gains label Q
+                _ent("g0", {"ns/name": None}, {"ns/knows": ["g0", "g4"]}),
+                # tombstone and upsert of one gid; its ref hits a gid
+                # tombstoned in the same batch
+                _ent("g1", deleted=True),
+                _ent("g1", {"ns/age": "7"}, {"ns/works": ["g2"]}),
+                _ent("g2", deleted=True),
+                _ent("g3", deleted=True),
+                # duplicate id: the last live occurrence wins
+                _ent("g0", {"ns/age": "a"}, {"ns/knows": ["g0"]}),
+            ],
+        ),
+        # a ref to a gid tombstoned in an earlier batch
+        (("P", "s"), [_ent("g5", {}, {"ns/knows": ["g3", "g5"]})]),
+    ]
+)
+def test_merge_commit_matches_apply_batch(spark, tmp_path, batches):
+    seed = GraphStore.empty(spark).apply_batch(
+        _entity_df(spark, [_ent(g, {"ns/name": g}, {"ns/knows": [GIDS[(i + 1) % 4]]})
+                           for i, g in enumerate(GIDS[:4])]),
+        "P",
+        "s",
+    )
+    storage = open_storage(str(tmp_path / uuid.uuid4().hex))
+    storage.commit(seed, cluster_buckets=2)  # several files, so merges prune
+    full = storage.load(spark).checkpointed()
+    for (label, source), batch in batches:
+        df = _entity_df(spark, batch)
+        full = full.apply_batch(df, label, source).checkpointed()
+        storage.merge_commit(spark, df, label, source)
+    assert _graph(storage.load(spark)) == _graph(full)

@@ -1157,7 +1157,7 @@ def _emb_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from opencypher_datalayer_spark.functions.pushdown import isin_bigint
+    from opencypher_datalayer_spark.functions.pushdown import isin_keys
     from opencypher_datalayer_spark.operators.vector_index import (
         index_meta,
         read_scales,
@@ -1258,7 +1258,7 @@ def _emb_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cand
     raw = spark.read.parquet(vectors_path)
     if len(cand_ids) <= EMB_RESCORE_PUSHDOWN_MAX:
-        raw = raw.where(isin_bigint("vec_id", cand_ids))
+        raw = raw.where(isin_keys("vec_id", cand_ids))
     raw = raw.select("vec_id", "v", "nrm").dropDuplicates(["vec_id"])
 
     def rescore_fn(batches):

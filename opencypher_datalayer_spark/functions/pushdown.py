@@ -1,22 +1,36 @@
-"""Pushdown-safe predicate builders.
+"""Pushdown-safe key-set predicate builder.
 
-A bounded id list applied as ``col IN (...)`` is the engine's
-point-fetch idiom (the IVF rerank's vec_id fetch, BM25's WAND-style
-skip-to-candidate): the list must reach the parquet reader as an
-``In``/``InSet`` source filter so footer statistics prune row groups.
-Two traps, both measured:
+A bounded key list applied as ``col IN (...)`` is the engine's
+point-fetch idiom: the served gid lookups (``storage.lookup_nodes``,
+``DataLayer.get_entities``, the entity feed's ref rebuild), the IVF
+rerank's vec_id fetch and BM25's WAND-style skip-to-candidate. The list
+must reach the parquet reader as an ``In``/``InSet`` source filter so
+footer statistics prune row groups. ``isin_keys`` is the one builder;
+the traps it avoids, all measured:
 
-- **Literal type.** ``isin(python_ints)`` on a bigint column makes
+- **Per-literal Column construction.** ``Column.isin(keys)`` and ``[F.lit(i)
+  for i in ids]`` cost one py4j round-trip per element: measured 15.5 s
+  to BUILD 10k literals and 140 s for 100k, plus a 12.9 s analysis
+  pass -- more than the scans it prunes. A single SQL fragment parses
+  in one py4j call: measured 0.05 s build + 2.9 s end-to-end at 100k
+  ids on the same frame, with the ``PushedFilters: [In(doc_id, ...)]``
+  plan intact.
+- **Int literal type.** ``isin(python_ints)`` on a bigint column makes
   Catalyst wrap the COLUMN in a cast to the literals' narrower type,
-  which defeats the parquet pushdown entirely. The literals must be
-  int64.
-- **Per-literal Column construction.** ``[F.lit(i).cast("bigint") for i
-  in ids]`` costs one py4j round-trip per element: measured 15.5 s to
-  BUILD 10k literals and 140 s for 100k, plus a 12.9 s analysis pass —
-  more than the scans it prunes. A single SQL fragment with
-  ``L``-suffixed bigint literals parses in one py4j call: measured
-  0.05 s build + 2.9 s end-to-end at 100k ids on the same frame, with
-  the ``PushedFilters: [In(doc_id, ...)]`` plan intact.
+  which defeats the parquet pushdown entirely. Int keys are rendered
+  as ``L``-suffixed int64 literals.
+- **String keys are arbitrary text** (gids are URIs), so each is quoted
+  with three escapes, applied in this order:
+
+  - ``\\`` -> ``\\\\``: a backslash starts an escape sequence in a Spark
+    SQL string literal, so a key's own backslash must be doubled (first,
+    so the backslashes the next two escapes add are not doubled);
+  - ``'`` -> ``\\'``: the quote would end the literal;
+  - ``$`` -> ``\\u0024``: Spark runs ``${...}`` variable substitution on
+    the raw expression text before parsing, so a key such as
+    ``urn:x/${env:HOME}`` would come back with the value of ``HOME``
+    in place of the variable. The unicode escape is decoded only after
+    substitution, inside the literal.
 """
 
 from __future__ import annotations
@@ -27,12 +41,20 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def isin_bigint(col_name: str, ids: Iterable[int]) -> Column:
-    """``col IN (<ids>)`` with int64 literals, built as ONE parsed SQL
-    fragment — O(1) py4j round-trips regardless of list size, and the
-    predicate reaches the parquet scan as a pushed-down ``In`` filter
-    (column untouched by casts). ``ids`` must be non-empty."""
-    body = ",".join(f"{int(i)}L" for i in ids)
+def _literal(key: int | str) -> str:
+    if isinstance(key, str):
+        quoted = key.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+        return f"'{quoted}'"
+    return f"{int(key)}L"
+
+
+def isin_keys(col_name: str, keys: Iterable[int | str]) -> Column:
+    """``col IN (<keys>)`` built as ONE parsed SQL fragment -- O(1) py4j
+    round-trips regardless of list size, and the predicate reaches the
+    parquet scan as a pushed-down ``In`` filter (column untouched by
+    casts). Int keys become int64 literals, str keys escaped string
+    literals; an empty list matches nothing."""
+    body = ",".join(_literal(k) for k in keys)
     if not body:
-        raise ValueError("isin_bigint needs a non-empty id list")
+        return F.lit(False)
     return F.expr(f"{col_name} IN ({body})")

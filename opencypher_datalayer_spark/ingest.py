@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opencypher_datalayer_spark.functions.localframe import local_df
+from opencypher_datalayer_spark.functions.pushdown import isin_keys
 from opencypher_datalayer_spark.model import ENTITY_SCHEMA, normalize_entity
 from opencypher_datalayer_spark.storage import open_storage
 from opencypher_datalayer_spark.store import GraphStore
@@ -237,15 +238,11 @@ class DataLayer:
         """Run an openCypher statement against the store. Read queries
         return a DataFrame; write statements (UNWIND/MERGE/SET/DELETE
         surface) apply to the store and commit, returning None."""
-        from opencypher_datalayer_spark.plans import run_cypher, run_cypher_write
-        from opencypher_datalayer_spark.plans.cypher import tokenize
-
-        toks = tokenize(statement)
-        is_read = any(t.kind == "kw" and t.value == "return" for t in toks)
-        if is_read:
-            return run_cypher(self._store, statement, params)
-        self._commit(run_cypher_write(self._store, statement, params))
-        return None
+        out = self._run_statement(statement, params)
+        if isinstance(out, GraphStore):
+            self._commit(out)
+            return None
+        return out
 
     def explain(self, statement: str, params: dict | None = None, mode: str = "formatted") -> str:
         """The physical plan a statement would execute, as a string —
@@ -259,20 +256,26 @@ class DataLayer:
         import io
         from contextlib import redirect_stdout
 
-        from opencypher_datalayer_spark.plans import run_cypher, run_cypher_write
-        from opencypher_datalayer_spark.plans.cypher import tokenize
-
-        toks = tokenize(statement)
-        is_read = any(t.kind == "kw" and t.value == "return" for t in toks)
-        df = (
-            run_cypher(self._store, statement, params)
-            if is_read
-            else run_cypher_write(self._store, statement, params).nodes
-        )
+        out = self._run_statement(statement, params)
+        df = out.nodes if isinstance(out, GraphStore) else out
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain(mode)
         return buf.getvalue()
+
+    def _run_statement(self, statement: str, params: dict | None) -> DataFrame | GraphStore:
+        """Plan ``statement`` on the current store: a read (it has a
+        RETURN) gives its result DataFrame, a write the uncommitted
+        post-write GraphStore. The planners are looked up at call time,
+        so a wrapped ``plans.run_cypher`` or ``cypher.tokenize`` is the
+        one that runs."""
+        from opencypher_datalayer_spark import plans
+        from opencypher_datalayer_spark.plans import cypher
+
+        toks = cypher.tokenize(statement)
+        if any(t.kind == "kw" and t.value == "return" for t in toks):
+            return plans.run_cypher(self._store, statement, params)
+        return plans.run_cypher_write(self._store, statement, params)
 
     # -- read side (S8/S9 — unsupported in the reference) --------------
 
@@ -287,10 +290,11 @@ class DataLayer:
         """Point lookup by gid. With durable storage this reads only the
         data files whose footer min/max range admits one of the keys
         (``storage.lookup_nodes`` — the gid-index analog, neo4j.go:21);
-        in-memory mode filters the snapshot."""
+        in-memory mode filters the snapshot. Both filter with the one
+        key-set builder, ``functions.pushdown.isin_keys``."""
         if self._storage is not None:
             return self._storage.lookup_nodes(self.spark, gids)
-        return self._store.nodes.where(F.col("gid").isin(gids))
+        return self._store.nodes.where(isin_keys("gid", gids))
 
     def changes(self, since: int = 0) -> tuple[DataFrame, int]:
         """Change-data feed between snapshot versions (S8 — the

@@ -57,7 +57,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from opencypher_datalayer_spark.functions.pushdown import isin_bigint
+from opencypher_datalayer_spark.functions.pushdown import isin_keys
 from opencypher_datalayer_spark.operators.textkit import tokens
 
 N_BUCKETS = 32  # postings/stats partition count; probes prune to the query's buckets
@@ -1374,7 +1374,7 @@ def bm25_topk(
             ids = [r.doc_id for r in cand.select("doc_id").distinct().collect()]
             if not ids:
                 return empty
-            r_scan = r_scan.where(isin_bigint("doc_id", ids))
+            r_scan = r_scan.where(isin_keys("doc_id", ids))
         rows = (
             r_scan.join(F.broadcast(_pairs_df(all_pairs)), "tok")
             .where(F.col("doc_id") != F.col("q_id"))
@@ -1407,7 +1407,7 @@ def bm25_topk(
             # column and defeat the pushdown, and per-literal Column
             # construction costs 140 s at the 100k cap
             # (functions/pushdown.py has the measurements).
-            n_scan = n_scan.where(isin_bigint("doc_id", ids))
+            n_scan = n_scan.where(isin_keys("doc_id", ids))
     n_rows = (
         n_scan.join(F.broadcast(_pairs_df(non_pairs)), "tok")
         .where(F.col("doc_id") != F.col("q_id"))

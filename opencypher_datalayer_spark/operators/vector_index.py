@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opencypher_datalayer_spark.functions.localframe import local_df
-from opencypher_datalayer_spark.functions.pushdown import isin_bigint
+from opencypher_datalayer_spark.functions.pushdown import isin_keys
 from opencypher_datalayer_spark.operators.ivf_codebook import (
     ASSIGN_A,
     assign_cells,
@@ -867,7 +867,7 @@ def ivf_pruned_topk(
         # (narrower literals cast the column and defeat the pushdown;
         # per-literal Column construction costs a py4j trip per id —
         # functions/pushdown.py has the measurements)
-        .where(isin_bigint("vec_id", short_ids))
+        .where(isin_keys("vec_id", short_ids))
         .select(
             F.col("vec_id").alias("c_id"),
             F.col("v").alias("cv2"),

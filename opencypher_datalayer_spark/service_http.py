@@ -34,7 +34,8 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from opencypher_datalayer_spark.ingest import BatchInfo, DataLayer, LayerConfigError
+from opencypher_datalayer_spark.functions.pushdown import isin_keys
+from opencypher_datalayer_spark.ingest import BatchInfo, DataLayer
 
 _FS_START = "universal-data-api-full-sync-start"
 _FS_END = "universal-data-api-full-sync-end"
@@ -117,29 +118,25 @@ class UdaService:
             def _error(self, code: int, msg: str) -> None:
                 self._json(code, {"error": msg})
 
-            def do_GET(self):  # noqa: N802 (http.server API)
+            def _serve(self, route) -> None:
+                """One error mapping for every method: a bad config or
+                request is the client's error (400), an unknown dataset
+                or route a 404, anything else a 500."""
                 try:
                     service._refresh_config()
-                    service._get(self)
-                except LayerConfigError as e:
-                    self._error(400, str(e))
+                    route(self)
                 except KeyError as e:
                     self._error(404, str(e))
+                except ValueError as e:  # LayerConfigError, JSONDecodeError
+                    self._error(400, str(e))
                 except Exception as e:  # pragma: no cover - defensive
                     self._error(500, f"{type(e).__name__}: {e}")
 
+            def do_GET(self):  # noqa: N802 (http.server API)
+                self._serve(service._get)
+
             def do_POST(self):  # noqa: N802
-                try:
-                    service._refresh_config()
-                    service._post(self)
-                except LayerConfigError as e:
-                    self._error(400, str(e))
-                except KeyError as e:
-                    self._error(404, str(e))
-                except (ValueError, json.JSONDecodeError) as e:
-                    self._error(400, str(e))
-                except Exception as e:  # pragma: no cover - defensive
-                    self._error(500, f"{type(e).__name__}: {e}")
+                self._serve(service._post)
 
         self._server = ThreadingHTTPServer((host, port), Handler)
         self.host = host
@@ -181,6 +178,8 @@ class UdaService:
         if len(parts) == 3 and parts[0] == "datasets" and parts[2] == "entities":
             self.layer.dataset(parts[1])  # 404 on unknown dataset
             limit = int(q.get("limit", "100"))
+            if limit < 1:
+                raise ValueError(f"limit must be at least 1, got {limit}")
             rows = self.layer.entities(q.get("from", ""), limit).collect()
             ents = self._to_uda([r.asDict() for r in rows])
             token = rows[-1]["gid"] if len(rows) == limit else ""
@@ -192,13 +191,7 @@ class UdaService:
         if len(parts) == 3 and parts[0] == "datasets" and parts[2] == "changes":
             self.layer.dataset(parts[1])
             feed, version = self.layer.changes(int(q.get("since", "0")))
-            ents = []
-            for r in feed.collect():
-                d = r.asDict()
-                e = {"id": d["gid"], "props": dict(d["props"] or {}), "refs": {}}
-                if d["change_type"] == "delete":
-                    e["deleted"] = True
-                ents.append(e)
+            ents = self._to_uda([r.asDict() for r in feed.collect()])
             h._json(
                 200,
                 [
@@ -251,26 +244,27 @@ class UdaService:
     # -- serialization --------------------------------------------------
 
     def _to_uda(self, node_rows: list[dict]) -> list[dict]:
-        """Node envelope rows -> UDA entity objects, with refs
-        reconstructed from the edge store for just the listed gids (a
-        page-sized broadcast semi-join, never a full edge scan)."""
+        """Node envelope rows (entity pages and change-feed rows) -> UDA
+        entity objects, with refs reconstructed from the edge store for
+        just the listed gids: one ``functions.pushdown.isin_keys`` filter
+        on ``src``, never a full edge scan. A change row whose
+        ``change_type`` is ``delete`` becomes a tombstone."""
         gids = [d["gid"] for d in node_rows]
         refs: dict[str, dict[str, list[str]]] = {g: {} for g in gids}
         if gids:
-            edges = self.layer.store.edges.where(
-                self.layer.store.edges.src.isin(gids)
-            ).collect()
+            edges = self.layer.store.edges.where(isin_keys("src", gids)).collect()
             for e in edges:
                 refs[e["src"]].setdefault(e["rel_type"], []).append(e["dst"])
         out = []
         for d in node_rows:
-            out.append(
-                {
-                    "id": d["gid"],
-                    "props": dict(d["props"] or {}),
-                    "refs": {k: sorted(v) for k, v in sorted(refs[d["gid"]].items())},
-                }
-            )
+            e = {
+                "id": d["gid"],
+                "props": dict(d["props"] or {}),
+                "refs": {k: sorted(v) for k, v in sorted(refs[d["gid"]].items())},
+            }
+            if d.get("change_type") == "delete":
+                e["deleted"] = True
+            out.append(e)
         return out
 
 

@@ -54,10 +54,10 @@ from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from opencypher_datalayer_spark.functions.pushdown import isin_keys
 from opencypher_datalayer_spark.model import EDGES_SCHEMA, NODES_SCHEMA
-from opencypher_datalayer_spark.store import CollectedBatch, GraphStore
+from opencypher_datalayer_spark.store import CollectedBatch, GraphStore, labels_expr
 
 _CURRENT = "CURRENT"
 _MANIFEST = "MANIFEST.json"
@@ -145,18 +145,16 @@ def _file_key_stats(path: str, keys: list[str]) -> tuple[dict[str, tuple], int]:
     return stats, md.num_rows
 
 
+def _admits(lo, hi, values: list[str]) -> bool:
+    """Could a file whose key range is [lo, hi] hold one of ``values``? A
+    range without footer stats admits everything (never unsound)."""
+    return lo is None or hi is None or any(lo <= v <= hi for v in values)
+
+
 def _prune(entries: list[dict], values: list[str]) -> list[dict]:
-    """Keep manifest entries whose [min,max] key range could contain any of
-    ``values``. Entries without stats are kept (never unsound)."""
-    kept = []
-    for e in entries:
-        if e["min"] is None or e["max"] is None:
-            if e["rows"]:
-                kept.append(e)
-            continue
-        if any(e["min"] <= v <= e["max"] for v in values):
-            kept.append(e)
-    return kept
+    """Keep the non-empty manifest entries whose key range admits any of
+    ``values``."""
+    return [e for e in entries if e["rows"] and _admits(e["min"], e["max"], values)]
 
 
 def _prune_edge_files(
@@ -167,41 +165,37 @@ def _prune_edge_files(
     tombstoned id (detach removes edges in either direction). Files
     without stats for a needed side are kept — pruning must never skip a
     file that could contain an affected row."""
-    kept = []
-    for e in entries:
-        if not e["rows"]:
-            continue
-        src_unknown = e["min"] is None or e["max"] is None
-        hit = src_unknown and bool(src_keys)
-        if not src_unknown and any(e["min"] <= k <= e["max"] for k in src_keys):
-            hit = True
-        if not hit and dst_keys:
-            dmn, dmx = e.get("dst_min"), e.get("dst_max")
-            if dmn is None or dmx is None:  # pre-dst-stats manifest
-                hit = True
-            elif any(dmn <= k <= dmx for k in dst_keys):
-                hit = True
-        if hit:
-            kept.append(e)
-    return kept
+    return [
+        e
+        for e in entries
+        if e["rows"]
+        and (
+            (src_keys and _admits(e["min"], e["max"], src_keys))
+            or (dst_keys and _admits(e.get("dst_min"), e.get("dst_max"), dst_keys))
+        )
+    ]
 
 
-def _with_labels(nodes: DataFrame) -> DataFrame:
-    """Canonical node projection. ``labels`` is coalesced through the
-    scalar ``label`` so snapshots written before the multi-label column
-    (whose parquet files lack it -> null) read back as single-label."""
-    return nodes.select(
-        "gid",
-        "label",
-        F.coalesce(
-            F.col("labels"),
-            F.when(F.col("label").isNotNull(), F.array("label")).otherwise(
-                F.array().cast("array<string>")
-            ),
-        ).alias("labels"),
-        "source",
-        "props",
-    )
+def _read_table(
+    spark: SparkSession, vdir: str, table: str, files: list[str] | None = None
+) -> DataFrame:
+    """Read one table of the snapshot in ``vdir``: all of it, or only
+    ``files`` (paths relative to ``vdir``, as the manifest records them;
+    an empty list reads nothing). The schema is explicit: an empty
+    snapshot has no data files to infer from, and partition columns must
+    come back string-typed and in declared column order. Node rows get
+    their label set through ``labels_expr``, so snapshots written before
+    the multi-label column read back as single-label."""
+    schema = NODES_SCHEMA if table == "nodes" else EDGES_SCHEMA
+    tdir = os.path.join(vdir, table)
+    if files == []:
+        df = spark.createDataFrame([], schema)
+    else:
+        paths = [tdir] if files is None else [os.path.join(vdir, f) for f in files]
+        df = spark.read.schema(schema).option("basePath", tdir).parquet(*paths)
+    if table == "nodes":
+        return df.select("gid", "label", labels_expr(df).alias("labels"), "source", "props")
+    return df.select("src", "rel_type", "dst", "source")
 
 
 class ParquetGraphStorage:
@@ -280,18 +274,7 @@ class ParquetGraphStorage:
         vdir = self._version_dir(v)
         if not os.path.isdir(vdir):
             raise ValueError(f"version {v} not found (vacuumed?)")
-        # explicit schemas: an empty snapshot has no data files to infer
-        # from, and partition columns must come back string-typed and in
-        # declared column order.
-        nodes = _with_labels(
-            spark.read.schema(NODES_SCHEMA).parquet(os.path.join(vdir, "nodes"))
-        )
-        edges = (
-            spark.read.schema(EDGES_SCHEMA)
-            .parquet(os.path.join(vdir, "edges"))
-            .select("src", "rel_type", "dst", "source")
-        )
-        return GraphStore(nodes, edges)
+        return GraphStore(_read_table(spark, vdir, "nodes"), _read_table(spark, vdir, "edges"))
 
     def commit(self, store: GraphStore, cluster_buckets: int | None = None) -> int:
         """Write ``store`` as a new snapshot version and publish it.
@@ -400,21 +383,23 @@ class ParquetGraphStorage:
             return json.load(f)
 
     def pruned_files(self, table: str, values: list[str], version: int | None = None) -> tuple[list[str], int] | None:
-        """File paths whose key range may contain any of ``values``, and the
-        total file count — or ``None`` when no manifest exists (pre-manifest
-        snapshot: caller falls back to a full scan)."""
+        """Paths (relative to the version directory, as the manifest
+        records them) of the files whose key range may contain any of
+        ``values``, and the total file count -- or ``None`` when no
+        manifest exists (pre-manifest snapshot: caller falls back to a
+        full scan)."""
         v = self.current_version() if version is None else version
         manifest = self._manifest(v)
         if manifest is None or table not in manifest:
             return None
         entries = manifest[table]
-        vdir = self._version_dir(v)
-        kept = _prune(entries, values)
-        return [os.path.join(vdir, e["path"]) for e in kept], len(entries)
+        return [e["path"] for e in _prune(entries, values)], len(entries)
 
     def lookup_nodes(self, spark: SparkSession, gids: list[str], version: int | None = None) -> DataFrame:
-        """Point lookup of nodes by gid, scanning only files whose footer
-        min/max range admits one of the keys.
+        """Point lookup of nodes by gid: read only the files whose footer
+        min/max range admits one of the keys (``pruned_files``), filtered
+        by ``functions.pushdown.isin_keys`` so the key set also reaches
+        the parquet scan as a pushed-down ``In`` filter.
 
         This is the read-side payoff of the manifest: at 100 TB a batch
         MERGE or entity lookup touches the few files holding its gids
@@ -424,17 +409,10 @@ class ParquetGraphStorage:
         v = self.current_version() if version is None else version
         pruned = self.pruned_files("nodes", gids, v)
         if pruned is None:
-            return self.load_version(spark, v).nodes.where(F.col("gid").isin(gids))
-        files, _total = pruned
-        if not files:
-            return GraphStore.empty(spark).nodes
-        vdir = self._version_dir(v)
-        df = _with_labels(
-            spark.read.schema(NODES_SCHEMA)
-            .option("basePath", os.path.join(vdir, "nodes"))
-            .parquet(*files)
-        )
-        return df.where(F.col("gid").isin(gids))
+            nodes = self.load_version(spark, v).nodes
+        else:
+            nodes = _read_table(spark, self._version_dir(v), "nodes", pruned[0])
+        return nodes.where(isin_keys("gid", gids))
 
     # -- pruned MERGE commit (the write-side payoff of C6) --------------
 
@@ -518,8 +496,8 @@ class ParquetGraphStorage:
         }
 
         sub = GraphStore(
-            self._read_files(spark, base_dir, "nodes", sorted(node_hit)),
-            self._read_files(spark, base_dir, "edges", sorted(edge_hit)),
+            _read_table(spark, base_dir, "nodes", sorted(node_hit)),
+            _read_table(spark, base_dir, "edges", sorted(edge_hit)),
         )
         merged = sub.apply_collected(collected, label, source)
 
@@ -563,22 +541,6 @@ class ParquetGraphStorage:
         v = self.current_version() if version is None else version
         tdir = os.path.join(self._version_dir(v), table)
         return len(glob.glob(os.path.join(tdir, "**", "*.parquet"), recursive=True))
-
-    def _read_files(
-        self, spark: SparkSession, vdir: str, table: str, rel_paths: list[str]
-    ) -> DataFrame:
-        schema = NODES_SCHEMA if table == "nodes" else EDGES_SCHEMA
-        if not rel_paths:
-            df = spark.createDataFrame([], schema)
-        else:
-            df = (
-                spark.read.schema(schema)
-                .option("basePath", os.path.join(vdir, table))
-                .parquet(*[os.path.join(vdir, p) for p in rel_paths])
-            )
-        if table == "nodes":
-            return _with_labels(df)
-        return df.select("src", "rel_type", "dst", "source")
 
     def vacuum(self, keep: int = 2) -> None:
         """Drop version directories older than the newest ``keep``."""

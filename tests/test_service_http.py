@@ -182,6 +182,44 @@ def test_malformed_entity_body_is_400_and_commits_nothing(service, entity):
     assert storage.current_version() == before
 
 
+@pytest.mark.parametrize(
+    "path",
+    [
+        "/datasets/people/entities?limit=abc",
+        "/datasets/people/entities?limit=0",
+        "/datasets/people/entities?limit=-1",
+        "/datasets/people/changes?since=abc",
+    ],
+)
+def test_bad_read_parameters_are_400(service, path):
+    """A read with a malformed parameter is the client's error: GET maps
+    errors the same way POST does."""
+    status, body = _req(service.port, path)
+    assert status == 400, body
+    assert "error" in body
+
+
+def test_change_feed_carries_refs_and_tombstones(service):
+    """The change feed serializes like the entity feed: an upsert carries
+    its refs, a delete is a tombstone."""
+    port = service.port
+    _req(port, "/datasets/people/entities", body=[CONTEXT, _fixture_entity(1)])
+    _, body = _req(port, "/datasets/people/changes?since=0")
+    since = int(body[-1]["token"])
+    status, _ = _req(
+        port,
+        "/datasets/people/entities",
+        body=[CONTEXT, _fixture_entity(2), {"id": "ex:things/1", "deleted": True}],
+    )
+    assert status == 200
+    status, body = _req(port, f"/datasets/people/changes?since={since}")
+    assert status == 200
+    ents = {e["id"]: e for e in body if not e["id"].startswith("@")}
+    assert ents[f"{NS}/things/2"]["refs"] == {"worksfor": [f"{NS}/things/mimiro"]}
+    assert "deleted" not in ents[f"{NS}/things/2"]
+    assert ents[f"{NS}/things/1"]["deleted"] is True
+
+
 def test_http_hot_reload_and_config_validation(spark, tmp_path):
     """S2 over the wire: editing the config file is visible on the next
     request; a malformed edit surfaces as a 400 (reference BadParameter,

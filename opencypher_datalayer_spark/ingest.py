@@ -17,7 +17,9 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,6 +117,23 @@ class DataLayer:
     ``storage_root=None`` keeps the graph in-memory (checkpointed
     DataFrames) for tests; a path makes every flush a durable atomic
     commit.
+
+    With durable storage the layer keeps no graph of its own, only a
+    cache of the newest snapshot it has loaded, and follows one rule
+    for reads and one for writes (the reference's per-statement Neo4j
+    transaction against committed state, ``neo4j.go:238-284``):
+
+    - every request reads one pinned snapshot: ``_snapshot()`` resolves
+      the current version once and serves rows, refs and change tokens
+      from that version only, so a second layer's (or process's)
+      commits are visible on the next request;
+    - every write is derived from the version it publishes on: a batch
+      is a ``merge_commit``, and a full-sync wipe or Cypher write is a
+      ``rewrite`` of the base version, so a concurrent writer's commit
+      is never overwritten.
+
+    In memory the same two routes hold with ``self._store`` as the only
+    version (0), and writes are serialized by one lock.
     """
 
     def __init__(
@@ -129,9 +148,10 @@ class DataLayer:
         self._storage = (
             open_storage(storage_root, storage_backend) if storage_root else None
         )
-        self._store = (
-            self._storage.load(spark) if self._storage else GraphStore.empty(spark)
-        )
+        # in memory: the graph; durable: the newest loaded snapshot and
+        # its version, replaced only by ``_snapshot`` (version 0 is empty)
+        self._version, self._store = 0, GraphStore.empty(spark)
+        self._lock = threading.Lock()
         self._config_path: str | None = None
         self._config_mtime: float = 0.0
         if config:
@@ -207,42 +227,68 @@ class DataLayer:
     def dataset_descriptions(self) -> list[dict]:
         return [{"name": d.name, "label": d.label} for d in self.datasets.values()]
 
-    # -- store access --------------------------------------------------
+    # -- the version rule: one read route, one write route ---------------
 
     @property
     def store(self) -> GraphStore:
-        return self._store
+        """The snapshot a request made now reads (``_snapshot``)."""
+        return self._snapshot()[1]
+
+    def _snapshot(self) -> tuple[int, GraphStore]:
+        """The one place a request's version is chosen: the current
+        version and its snapshot. The version is resolved on every call
+        (one pointer read); a snapshot never changes once written, so
+        the newest loaded one is cached with no invalidation. Resolving
+        under the lock keeps the cached version no newer than the
+        resolved one, and no version is loaded twice. In memory the
+        graph is version 0."""
+        if self._storage is None:
+            return 0, self._store
+        with self._lock:
+            v = self._storage.current_version()
+            if v != self._version:
+                self._version, self._store = v, self._storage.load_version(self.spark, v)
+            return v, self._store
+
+    def _rewrite(self, fn: Callable[[GraphStore], GraphStore]) -> None:
+        """The one write route for a whole-graph change (full-sync wipe,
+        Cypher write): publish ``fn(base)`` derived from the version it
+        publishes on (``storage.rewrite``), then refresh the cache. In
+        memory the read-modify-write of ``self._store`` runs under the
+        lock, so concurrent writers each see the other's result."""
+        if self._storage is None:
+            with self._lock:
+                self._store = fn(self._store).checkpointed()
+            return
+        self._storage.rewrite(self.spark, fn)
+        self._snapshot()
 
     def _apply(self, batch: DataFrame, ds: DatasetConfig) -> None:
-        if self._storage is not None:
-            # pruned MERGE: rewrite only the files whose gid range the
-            # batch touches; untouched files carry forward as links
-            self._storage.merge_commit(self.spark, batch, ds.label, ds.name)
-            self._store = self._storage.load(self.spark)
-        else:
-            self._store = self._store.apply_batch(batch, ds.label, ds.name).checkpointed()
+        if self._storage is None:
+            self._rewrite(lambda store: store.apply_batch(batch, ds.label, ds.name))
+            return
+        # pruned MERGE: rewrite only the files whose gid range the
+        # batch touches; untouched files carry forward as links
+        self._storage.merge_commit(self.spark, batch, ds.label, ds.name)
+        self._snapshot()
 
     def _wipe(self, ds: DatasetConfig) -> None:
-        self._commit(self._store.delete_all(ds.label, ds.name))
-
-    def _commit(self, new: GraphStore) -> None:
-        if self._storage is not None:
-            self._storage.commit(new)
-            self._store = self._storage.load(self.spark)
-        else:
-            self._store = new.checkpointed()
+        self._rewrite(lambda store: store.delete_all(ds.label, ds.name))
 
     # -- ad-hoc query (S10 — the reference's stub, neo4j.go:289-291) ----
 
     def query(self, statement: str, params: dict | None = None):
-        """Run an openCypher statement against the store. Read queries
-        return a DataFrame; write statements (UNWIND/MERGE/SET/DELETE
-        surface) apply to the store and commit, returning None."""
-        out = self._run_statement(statement, params)
-        if isinstance(out, GraphStore):
-            self._commit(out)
-            return None
-        return out
+        """Run an openCypher statement. A read plans on the request's
+        snapshot and returns a DataFrame; a write statement (the
+        UNWIND/MERGE/SET/DELETE surface) is planned on the version it
+        publishes on (``_rewrite``), so a statement that fails to plan
+        publishes nothing, and returns None."""
+        from opencypher_datalayer_spark import plans
+
+        if self._is_read(statement):
+            return plans.run_cypher(self.store, statement, params)
+        self._rewrite(lambda store: plans.run_cypher_write(store, statement, params))
+        return None
 
     def explain(self, statement: str, params: dict | None = None, mode: str = "formatted") -> str:
         """The physical plan a statement would execute, as a string —
@@ -256,67 +302,77 @@ class DataLayer:
         import io
         from contextlib import redirect_stdout
 
-        out = self._run_statement(statement, params)
-        df = out.nodes if isinstance(out, GraphStore) else out
+        from opencypher_datalayer_spark import plans
+
+        if self._is_read(statement):
+            df = plans.run_cypher(self.store, statement, params)
+        else:
+            df = plans.run_cypher_write(self.store, statement, params).nodes
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain(mode)
         return buf.getvalue()
 
-    def _run_statement(self, statement: str, params: dict | None) -> DataFrame | GraphStore:
-        """Plan ``statement`` on the current store: a read (it has a
-        RETURN) gives its result DataFrame, a write the uncommitted
-        post-write GraphStore. The planners are looked up at call time,
-        so a wrapped ``plans.run_cypher`` or ``cypher.tokenize`` is the
-        one that runs."""
-        from opencypher_datalayer_spark import plans
+    @staticmethod
+    def _is_read(statement: str) -> bool:
+        """A read has a RETURN; anything else is a write. The planners
+        and ``cypher.tokenize`` are looked up at call time, so a wrapped
+        ``plans.run_cypher`` or ``cypher.tokenize`` is the one that
+        runs."""
         from opencypher_datalayer_spark.plans import cypher
 
-        toks = cypher.tokenize(statement)
-        if any(t.kind == "kw" and t.value == "return" for t in toks):
-            return plans.run_cypher(self._store, statement, params)
-        return plans.run_cypher_write(self._store, statement, params)
+        return any(t.kind == "kw" and t.value == "return" for t in cypher.tokenize(statement))
 
     # -- read side (S8/S9 — unsupported in the reference) --------------
 
-    def entities(self, from_gid: str = "", limit: int = 100) -> DataFrame:
-        """Paged node scan ordered by gid; ``from_gid`` is the page token."""
-        nodes = self._store.nodes
+    def entities(
+        self, from_gid: str = "", limit: int = 100, snapshot: tuple[int, GraphStore] | None = None
+    ) -> DataFrame:
+        """Paged node scan ordered by gid; ``from_gid`` is the page token.
+        ``snapshot`` is a ``_snapshot()`` the caller already pinned (the
+        HTTP feed rebuilds refs from the same one)."""
+        nodes = (snapshot or self._snapshot())[1].nodes
         if from_gid:
             nodes = nodes.where(F.col("gid") > from_gid)
         return nodes.orderBy("gid").limit(limit)
 
     def get_entities(self, gids: list[str]) -> DataFrame:
         """Point lookup by gid. With durable storage this reads only the
-        data files whose footer min/max range admits one of the keys
-        (``storage.lookup_nodes`` — the gid-index analog, neo4j.go:21);
-        in-memory mode filters the snapshot. Both filter with the one
-        key-set builder, ``functions.pushdown.isin_keys``."""
+        data files of the pinned version whose footer min/max range
+        admits one of the keys (``storage.lookup_nodes`` — the gid-index
+        analog, neo4j.go:21); in-memory mode filters the snapshot. Both
+        filter with the one key-set builder,
+        ``functions.pushdown.isin_keys``."""
+        version, store = self._snapshot()
         if self._storage is not None:
-            return self._storage.lookup_nodes(self.spark, gids)
-        return self._store.nodes.where(isin_keys("gid", gids))
+            return self._storage.lookup_nodes(self.spark, gids, version)
+        return store.nodes.where(isin_keys("gid", gids))
 
-    def changes(self, since: int = 0) -> tuple[DataFrame, int]:
+    def changes(
+        self, since: int = 0, snapshot: tuple[int, GraphStore] | None = None
+    ) -> tuple[DataFrame, int]:
         """Change-data feed between snapshot versions (S8 — the
         reference answers LayerNotSupported; with versioned storage this
-        is a real CDC diff). Returns (changes, current_version); the
-        token for the next poll is the returned version.
+        is a real CDC diff). Returns (changes, version): the diff of
+        exactly version ``since`` against the pinned version, which is
+        also the token for the next poll, so the token is never ahead of
+        the rows. ``snapshot`` is a ``_snapshot()`` the caller already
+        pinned.
 
         Change rows are the node envelope plus ``change_type``:
-        ``upsert`` (new or modified since ``since``) or ``delete``
-        (present at ``since``, gone now). In-memory mode (no storage)
-        degrades to a full-snapshot upsert feed with version 0.
+        ``upsert`` (new since ``since``, or with a changed label set,
+        source, props or outgoing refs) or ``delete`` (present at
+        ``since``, gone now). In-memory mode (no storage) degrades to a
+        full-snapshot upsert feed with version 0.
         """
-        nodes = self._store.nodes
+        version, store = snapshot or self._snapshot()
+        nodes = store.nodes
         upsert = F.lit("upsert").alias("change_type")
-        if not self._storage:
-            return nodes.select("*", upsert), 0
-        version = self._storage.current_version()
+        if self._storage is None or since <= 0:
+            return nodes.select("*", upsert), version
         if since >= version:
             return nodes.limit(0).select("*", upsert), version
-        if since <= 0:
-            return nodes.select("*", upsert), version
-        old = self._storage.load_version(self.spark, since).nodes
+        old = self._storage.load_version(self.spark, since)
         # set-diff via canonical row fingerprint (exceptAll can't handle
         # MapType columns; sorted map entries make the hash stable)
         fp = F.md5(
@@ -329,14 +385,25 @@ class DataLayer:
                 )
             )
         )
-        new_fp = nodes.withColumn("_fp", fp)
-        old_fp = old.withColumn("_fp", fp)
-        changed = new_fp.join(old_fp.select("gid", "_fp"), ["gid", "_fp"], "left_anti").drop(
-            "_fp"
+        changed = nodes.select("gid", fp.alias("_fp")).join(
+            old.nodes.select("gid", fp.alias("_fp")), ["gid", "_fp"], "left_anti"
         )
-        deleted = old.join(nodes.select("gid"), "gid", "left_anti")
+        # refs live on the edge rows: a src whose outgoing edge set
+        # differs either way changed too (edges hold no map column, so a
+        # plain anti-join compares them)
+        key = ["src", "rel_type", "dst"]
+        new_e, old_e = store.edges.select(key), old.edges.select(key)
+        rewired = new_e.join(old_e, key, "left_anti").unionByName(
+            old_e.join(new_e, key, "left_anti")
+        )
+        upserted = nodes.join(
+            changed.select("gid").unionByName(rewired.select(F.col("src").alias("gid"))),
+            "gid",
+            "left_semi",
+        )
+        deleted = old.nodes.join(nodes.select("gid"), "gid", "left_anti")
         return (
-            changed.select("*", upsert).unionByName(
+            upserted.select("*", upsert).unionByName(
                 deleted.select("*", F.lit("delete").alias("change_type"))
             ),
             version,

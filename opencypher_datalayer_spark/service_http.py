@@ -36,6 +36,7 @@ from urllib.parse import parse_qs, urlparse
 
 from opencypher_datalayer_spark.functions.pushdown import isin_keys
 from opencypher_datalayer_spark.ingest import BatchInfo, DataLayer
+from opencypher_datalayer_spark.store import GraphStore
 
 _FS_START = "universal-data-api-full-sync-start"
 _FS_END = "universal-data-api-full-sync-end"
@@ -180,8 +181,9 @@ class UdaService:
             limit = int(q.get("limit", "100"))
             if limit < 1:
                 raise ValueError(f"limit must be at least 1, got {limit}")
-            rows = self.layer.entities(q.get("from", ""), limit).collect()
-            ents = self._to_uda([r.asDict() for r in rows])
+            snap = self.layer._snapshot()
+            rows = self.layer.entities(q.get("from", ""), limit, snap).collect()
+            ents = self._to_uda([r.asDict() for r in rows], snap[1])
             token = rows[-1]["gid"] if len(rows) == limit else ""
             body = [{"id": "@context", "namespaces": {}}, *ents]
             if token:
@@ -190,8 +192,9 @@ class UdaService:
             return
         if len(parts) == 3 and parts[0] == "datasets" and parts[2] == "changes":
             self.layer.dataset(parts[1])
-            feed, version = self.layer.changes(int(q.get("since", "0")))
-            ents = self._to_uda([r.asDict() for r in feed.collect()])
+            snap = self.layer._snapshot()
+            feed, version = self.layer.changes(int(q.get("since", "0")), snap)
+            ents = self._to_uda([r.asDict() for r in feed.collect()], snap[1])
             h._json(
                 200,
                 [
@@ -243,16 +246,18 @@ class UdaService:
 
     # -- serialization --------------------------------------------------
 
-    def _to_uda(self, node_rows: list[dict]) -> list[dict]:
+    def _to_uda(self, node_rows: list[dict], store: GraphStore) -> list[dict]:
         """Node envelope rows (entity pages and change-feed rows) -> UDA
-        entity objects, with refs reconstructed from the edge store for
-        just the listed gids: one ``functions.pushdown.isin_keys`` filter
-        on ``src``, never a full edge scan. A change row whose
-        ``change_type`` is ``delete`` becomes a tombstone."""
+        entity objects, with refs reconstructed from the edges of
+        ``store`` -- the snapshot the rows were read from, so rows and
+        refs are of one version -- for just the listed gids: one
+        ``functions.pushdown.isin_keys`` filter on ``src``, never a full
+        edge scan. A change row whose ``change_type`` is ``delete``
+        becomes a tombstone (its refs are gone at that version)."""
         gids = [d["gid"] for d in node_rows]
         refs: dict[str, dict[str, list[str]]] = {g: {} for g in gids}
         if gids:
-            edges = self.layer.store.edges.where(isin_keys("src", gids)).collect()
+            edges = store.edges.where(isin_keys("src", gids)).collect()
             for e in edges:
                 refs[e["src"]].setdefault(e["rel_type"], []).append(e["dst"])
         out = []

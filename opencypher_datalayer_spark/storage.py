@@ -290,8 +290,10 @@ class ParquetGraphStorage:
         Footer stats are collected either way (cheap, driver-side).
 
         The snapshot is built by the caller, not derived from the base
-        version, so it is last-writer-wins: a full sync is authoritative
-        (W10's wipe semantics) and is never rebuilt on a lost race.
+        version, so it is last-writer-wins and is never rebuilt on a lost
+        race: it is for bulk loads that replace the table. Every write
+        ``DataLayer`` makes is derived instead (``merge_commit``,
+        ``rewrite``).
         """
         return self._publish_build(
             lambda _base, vdir: self._write_snapshot(vdir, store, cluster_buckets),
@@ -519,23 +521,37 @@ class ParquetGraphStorage:
         )
         self._write_manifest(vdir, carry=carry)
 
+    def rewrite(
+        self,
+        spark: SparkSession,
+        fn: Callable[[GraphStore], GraphStore],
+        cluster_buckets: int | None = None,
+    ) -> int:
+        """Publish ``fn(base)`` as a full snapshot, where ``base`` is the
+        snapshot of the version it publishes on: the full-sync wipe, a
+        Cypher write and compaction. Like a merge, the rewrite is derived
+        from its base version, so a batch published between a caller's
+        read and this publish is never dropped: the ``parquet`` lock
+        orders the build after every earlier publish, and the ``txnlog``
+        backend rebuilds it on the winner's snapshot. ``fn`` runs inside
+        the publish step, so if it raises nothing is published.
+        ``cluster_buckets`` is ``commit``'s."""
+        return self._publish_build(
+            lambda base, vdir: self._write_snapshot(
+                vdir, fn(self.load_version(spark, base)), cluster_buckets
+            )
+        )
+
     def compact(self, spark: SparkSession, cluster_buckets: int = 8) -> int:
         """Rewrite the current version range-clustered — the OPTIMIZE
         role in a table format. Repeated ``merge_commit``s each append a
         few small files with overlapping key ranges, which slowly erodes
-        manifest pruning selectivity; compaction reads the base version,
-        range-partitions each table on its merge key, and publishes a
-        fresh version whose files cover narrow disjoint ranges (old
-        versions stay readable for time travel until ``vacuum``).
-
-        Like a merge, compaction is derived from its base version: a
-        batch published between its read and its publish is never
-        dropped -- the compaction is rebuilt on the winner's snapshot."""
-        return self._publish_build(
-            lambda base, vdir: self._write_snapshot(
-                vdir, self.load_version(spark, base), cluster_buckets
-            )
-        )
+        manifest pruning selectivity; compaction is the identity
+        ``rewrite`` with range-partitioned tables, so the published
+        version's files cover narrow disjoint ranges (old versions stay
+        readable for time travel until ``vacuum``) and no batch merged
+        meanwhile is dropped."""
+        return self.rewrite(spark, lambda store: store, cluster_buckets)
 
     def file_count(self, table: str, version: int | None = None) -> int:
         v = self.current_version() if version is None else version
@@ -575,13 +591,12 @@ class TxnLogGraphStorage(ParquetGraphStorage):
       primitive;
     - a writer that loses the race re-reads the new current version
       and retries. A build derived from the base version
-      (``merge_commit``, ``compact``) is discarded and rebuilt on the
-      winner's snapshot, so both batches survive (the reference's
-      serialized per-batch transactions, ``neo4j.go:238-284``). A
-      caller-built ``commit(store)`` is self-contained, so it is
-      re-published at the next slot without a rewrite (full sync is
-      authoritative last-writer-wins, as in the base class and W10's
-      wipe semantics).
+      (``merge_commit``, ``rewrite``, ``compact``) is discarded and
+      rebuilt on the winner's snapshot, so both batches survive (the
+      reference's serialized per-batch transactions,
+      ``neo4j.go:238-284``). A caller-built ``commit(store)`` (a bulk
+      load) is self-contained, so it is re-published at the next slot
+      without a rewrite (last-writer-wins, as in the base class).
 
     Everything above the commit protocol — the snapshot builders,
     manifest stats, pruned merge, clustering, compaction, time travel —

@@ -430,13 +430,32 @@ def test_parquet_crash_before_current_swap_does_not_wedge(spark, tmp_path, monke
     assert len(gids) == len(set(gids)) == 12
 
 
-def test_compact_keeps_batch_merged_during_compaction(spark, tmp_path, backend, monkeypatch):
-    """A merge that lands between compaction's read of the base version
-    and its publish must survive the compaction: compaction is derived
-    from its base, so it is ordered after the merge or rebuilt on it."""
+@pytest.mark.parametrize("rewrite", ["compact", "wipe", "cypher_write"])
+def test_compact_keeps_batch_merged_during_compaction(
+    spark, tmp_path, backend, monkeypatch, rewrite
+):
+    """A merge that lands between a rewrite's read of the base version
+    and its publish must survive the rewrite. Compaction, the full-sync
+    wipe (of a dataset the merge is not in) and a Cypher write are all
+    derived from their base, so each is ordered after the merge or
+    rebuilt on it."""
     import os as _os
     import threading
 
+    from opencypher_datalayer_spark.plans import run_cypher_write
+
+    rewrites = {
+        "compact": lambda: storage.compact(spark, cluster_buckets=3),
+        "wipe": lambda: storage.rewrite(spark, lambda s: s.delete_all("P", "wiped")),
+        "cypher_write": lambda: storage.rewrite(
+            spark,
+            lambda s: run_cypher_write(
+                s,
+                "UNWIND $items AS item MERGE (n {gid: item.gid}) SET n:City",
+                {"items": [{"gid": f"{NS}/city"}]},
+            ),
+        ),
+    }
     root = str(tmp_path / "cm")
     storage = _seed(spark, root, n=12, buckets=3, backend=backend)
     other = open_storage(root, backend)  # a second writer on the same root
@@ -472,7 +491,7 @@ def test_compact_keeps_batch_merged_during_compaction(spark, tmp_path, backend, 
         return loaded
 
     monkeypatch.setattr(storage, "load_version", load_then_race)
-    storage.compact(spark, cluster_buckets=3)
+    rewrites[rewrite]()
     writer.join(timeout=300)
     monkeypatch.undo()
     assert not writer.is_alive()
@@ -481,6 +500,7 @@ def test_compact_keeps_batch_merged_during_compaction(spark, tmp_path, backend, 
     gids = {r.gid for r in storage.load(spark).nodes.collect()}
     assert f"{NS}/raced" in gids
     assert {f"{NS}/n{i:04d}" for i in range(12)} <= gids
+    assert (f"{NS}/city" in gids) == (rewrite == "cypher_write")
 
 
 def test_merge_commit_job_count_is_pinned(spark, tmp_path):

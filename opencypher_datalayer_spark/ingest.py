@@ -15,8 +15,11 @@ storage, so reading back is a scan, not a federation problem.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
+import tempfile
 import threading
 from dataclasses import dataclass
 from typing import Callable
@@ -25,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opencypher_datalayer_spark.functions.localframe import local_df
-from opencypher_datalayer_spark.functions.pushdown import isin_keys
 from opencypher_datalayer_spark.model import ENTITY_SCHEMA, normalize_entity
 from opencypher_datalayer_spark.storage import open_storage
 from opencypher_datalayer_spark.store import GraphStore
@@ -57,15 +59,17 @@ class DatasetWriter:
     """Buffers entities and applies them in micro-batches (W1/W2).
 
     One flush == one batch applied atomically == the reference's
-    per-batch transaction: a ``storage.merge_commit`` with durable
-    storage, a ``GraphStore.apply_batch`` in memory.
+    per-batch transaction: one published version. A start batch's wipe
+    is published with the first flush, or alone at ``close`` if there
+    was nothing to flush.
     """
 
-    def __init__(self, layer: "DataLayer", dataset: DatasetConfig):
+    def __init__(self, layer: "DataLayer", dataset: DatasetConfig, wipe: bool = False):
         self._layer = layer
         self._ds = dataset
         self._buffer: list[dict] = []
         self._seq = 0
+        self._wipe_pending = wipe
 
     def write(self, entity: dict) -> None:
         row = normalize_entity(entity)
@@ -78,11 +82,15 @@ class DatasetWriter:
     def close(self) -> None:
         if self._buffer:
             self._flush()
+        elif self._wipe_pending:
+            self._layer._wipe(self._ds)
+            self._wipe_pending = False
 
     def _flush(self) -> None:
         batch = local_df(self._layer.spark, self._buffer, ENTITY_SCHEMA)
         self._buffer = []
-        self._layer._apply(batch, self._ds)
+        self._layer._apply(batch, self._ds, wipe=self._wipe_pending)
+        self._wipe_pending = False
 
 
 class Dataset:
@@ -99,12 +107,11 @@ class Dataset:
     def full_sync(self, batch_info: BatchInfo) -> DatasetWriter:
         """Wipe (label, source) on the start batch, then write (W10).
 
-        Unlike the reference, wipe+load commits atomically per flush —
-        readers never observe the emptied intermediate state.
+        Unlike the reference, the wipe is published in one version with
+        the writer's first flush, so readers never observe the emptied
+        intermediate state.
         """
-        if batch_info.is_start_batch:
-            self._layer._wipe(self.config)
-        return DatasetWriter(self._layer, self.config)
+        return DatasetWriter(self._layer, self.config, wipe=batch_info.is_start_batch)
 
     def incremental(self) -> DatasetWriter:
         """Pure upsert stream, no wipe (W11)."""
@@ -114,13 +121,13 @@ class Dataset:
 class DataLayer:
     """Engine session + dataset registry (S1-S4).
 
-    ``storage_root=None`` keeps the graph in-memory (checkpointed
-    DataFrames) for tests; a path makes every flush a durable atomic
-    commit.
+    Every flush is a durable atomic commit to versioned storage at
+    ``storage_root``; ``storage_root=None`` opens a private temporary
+    root, removed at interpreter exit, with the same semantics.
 
-    With durable storage the layer keeps no graph of its own, only a
-    cache of the newest snapshot it has loaded, and follows one rule
-    for reads and one for writes (the reference's per-statement Neo4j
+    The layer keeps no graph of its own, only a cache of the newest
+    snapshot it has loaded, and follows one rule for reads and one for
+    writes (the reference's per-statement Neo4j
     transaction against committed state, ``neo4j.go:238-284``):
 
     - every request reads one pinned snapshot: ``_snapshot()`` resolves
@@ -128,12 +135,10 @@ class DataLayer:
       from that version only, so a second layer's (or process's)
       commits are visible on the next request;
     - every write is derived from the version it publishes on: a batch
-      is a ``merge_commit``, and a full-sync wipe or Cypher write is a
+      is a ``merge_commit`` (a ``wipe_merge_commit`` for a full sync's
+      first), and an empty start batch's wipe or a Cypher write is a
       ``rewrite`` of the base version, so a concurrent writer's commit
       is never overwritten.
-
-    In memory the same two routes hold with ``self._store`` as the only
-    version (0), and writes are serialized by one lock.
     """
 
     def __init__(
@@ -145,11 +150,12 @@ class DataLayer:
     ):
         self.spark = spark
         self.datasets: dict[str, DatasetConfig] = {}
-        self._storage = (
-            open_storage(storage_root, storage_backend) if storage_root else None
-        )
-        # in memory: the graph; durable: the newest loaded snapshot and
-        # its version, replaced only by ``_snapshot`` (version 0 is empty)
+        if not storage_root:
+            storage_root = tempfile.mkdtemp(prefix="datalayer-")
+            atexit.register(shutil.rmtree, storage_root, True)
+        self._storage = open_storage(storage_root, storage_backend)
+        # the newest loaded snapshot and its version, replaced only by
+        # ``_snapshot`` (version 0 is empty)
         self._version, self._store = 0, GraphStore.empty(spark)
         self._lock = threading.Lock()
         self._config_path: str | None = None
@@ -240,10 +246,7 @@ class DataLayer:
         (one pointer read); a snapshot never changes once written, so
         the newest loaded one is cached with no invalidation. Resolving
         under the lock keeps the cached version no newer than the
-        resolved one, and no version is loaded twice. In memory the
-        graph is version 0."""
-        if self._storage is None:
-            return 0, self._store
+        resolved one, and no version is loaded twice."""
         with self._lock:
             v = self._storage.current_version()
             if v != self._version:
@@ -251,25 +254,18 @@ class DataLayer:
             return v, self._store
 
     def _rewrite(self, fn: Callable[[GraphStore], GraphStore]) -> None:
-        """The one write route for a whole-graph change (full-sync wipe,
-        Cypher write): publish ``fn(base)`` derived from the version it
-        publishes on (``storage.rewrite``), then refresh the cache. In
-        memory the read-modify-write of ``self._store`` runs under the
-        lock, so concurrent writers each see the other's result."""
-        if self._storage is None:
-            with self._lock:
-                self._store = fn(self._store).checkpointed()
-            return
+        """The one write route for a whole-graph change (an empty start
+        batch's wipe, a Cypher write): publish ``fn(base)`` derived from
+        the version it publishes on (``storage.rewrite``), then refresh
+        the cache."""
         self._storage.rewrite(self.spark, fn)
         self._snapshot()
 
-    def _apply(self, batch: DataFrame, ds: DatasetConfig) -> None:
-        if self._storage is None:
-            self._rewrite(lambda store: store.apply_batch(batch, ds.label, ds.name))
-            return
-        # pruned MERGE: rewrite only the files whose gid range the
-        # batch touches; untouched files carry forward as links
-        self._storage.merge_commit(self.spark, batch, ds.label, ds.name)
+    def _apply(self, batch: DataFrame, ds: DatasetConfig, wipe: bool = False) -> None:
+        """Publish one batch as a pruned MERGE; ``wipe`` (a full sync's
+        first flush) publishes the dataset's wipe in the same version."""
+        commit = self._storage.wipe_merge_commit if wipe else self._storage.merge_commit
+        commit(self.spark, batch, ds.label, ds.name)
         self._snapshot()
 
     def _wipe(self, ds: DatasetConfig) -> None:
@@ -337,16 +333,11 @@ class DataLayer:
         return nodes.orderBy("gid").limit(limit)
 
     def get_entities(self, gids: list[str]) -> DataFrame:
-        """Point lookup by gid. With durable storage this reads only the
-        data files of the pinned version whose footer min/max range
-        admits one of the keys (``storage.lookup_nodes`` — the gid-index
-        analog, neo4j.go:21); in-memory mode filters the snapshot. Both
-        filter with the one key-set builder,
-        ``functions.pushdown.isin_keys``."""
-        version, store = self._snapshot()
-        if self._storage is not None:
-            return self._storage.lookup_nodes(self.spark, gids, version)
-        return store.nodes.where(isin_keys("gid", gids))
+        """Point lookup by gid: reads only the data files of the pinned
+        version whose footer min/max range admits one of the keys
+        (``storage.lookup_nodes`` — the gid-index analog,
+        neo4j.go:21)."""
+        return self._storage.lookup_nodes(self.spark, gids, self._snapshot()[0])
 
     def changes(
         self, since: int = 0, snapshot: tuple[int, GraphStore] | None = None
@@ -362,13 +353,13 @@ class DataLayer:
         Change rows are the node envelope plus ``change_type``:
         ``upsert`` (new since ``since``, or with a changed label set,
         source, props or outgoing refs) or ``delete`` (present at
-        ``since``, gone now). In-memory mode (no storage) degrades to a
-        full-snapshot upsert feed with version 0.
+        ``since``, gone now). ``since`` 0 (the empty version) makes every
+        row an upsert.
         """
         version, store = snapshot or self._snapshot()
         nodes = store.nodes
         upsert = F.lit("upsert").alias("change_type")
-        if self._storage is None or since <= 0:
+        if since <= 0:
             return nodes.select("*", upsert), version
         if since >= version:
             return nodes.limit(0).select("*", upsert), version

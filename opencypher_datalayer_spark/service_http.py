@@ -302,8 +302,8 @@ def main(argv: list[str] | None = None, wait: bool = True) -> "UdaService":
     the reference's ``cdl.NewServiceRunner(...).StartAndWait()``. The
     listen port comes from the config's ``layer_config.port`` (the
     reference's service-runner key; 0 = pick a free port), overridable
-    via ``DATALAYER_PORT``; ``DATALAYER_STORAGE_ROOT`` selects durable
-    storage (unset = in-memory store). With ``wait=False`` returns the
+    via ``DATALAYER_PORT``; ``DATALAYER_STORAGE_ROOT`` is the storage
+    root (unset = a temporary root, removed at exit). With ``wait=False`` returns the
     started service (tests drive it this way)."""
     import json as _json
     import os

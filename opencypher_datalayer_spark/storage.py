@@ -5,9 +5,9 @@ The reference got atomicity from Neo4j's per-batch transaction
 (``neo4j.go:238-284``) and full-sync wipes were *not* atomic across the
 sync (readers between wipe and load saw an empty dataset — SURVEY §3.3).
 Here every commit is a new immutable version directory plus an atomic
-rename of the pointer file, so readers always see a complete snapshot
-and a full sync becomes an atomic swap — same semantics, visibility gap
-fixed.
+rename of the pointer file, so readers always see a complete snapshot,
+and a full sync's wipe is published with its first batch
+(``wipe_merge_commit``) — same semantics, visibility gap fixed.
 
 On a cluster this role is played by Delta/Iceberg (not on this image);
 the interface is kept small so a Delta-backed implementation can drop in.
@@ -289,22 +289,21 @@ class ParquetGraphStorage:
         service skip it; periodic compaction / analytic snapshots enable it.
         Footer stats are collected either way (cheap, driver-side).
 
-        The snapshot is built by the caller, not derived from the base
-        version, so it is last-writer-wins and is never rebuilt on a lost
-        race: it is for bulk loads that replace the table. Every write
-        ``DataLayer`` makes is derived instead (``merge_commit``,
+        The snapshot is built by the caller and ignores its base
+        version, so it replaces the table (last writer wins): it is for
+        bulk loads. Every write ``DataLayer`` makes is derived from its
+        base instead (``merge_commit``, ``wipe_merge_commit``,
         ``rewrite``).
         """
         return self._publish_build(
-            lambda _base, vdir: self._write_snapshot(vdir, store, cluster_buckets),
-            derived=False,
+            lambda _base, vdir: self._write_snapshot(vdir, store, cluster_buckets)
         )
 
-    def _publish_build(self, build: Callable[[int, str], None], derived: bool = True) -> int:
+    def _publish_build(self, build: Callable[[int, str], None]) -> int:
         """The ``parquet`` publish step: under the commit lock, let base =
         the current version, ``build(base, vdir)`` into ``v{base+1}`` and
-        swap CURRENT atomically. ``derived`` is moot here -- the lock
-        already orders the build after every earlier publish."""
+        swap CURRENT atomically. The lock orders the build after every
+        earlier publish."""
         self._acquire_commit_lock()
         try:
             v = self.current_version() + 1
@@ -377,24 +376,24 @@ class ParquetGraphStorage:
         with open(os.path.join(vdir, _MANIFEST), "w") as f:
             json.dump(manifest, f)
 
-    def _manifest(self, v: int) -> dict | None:
-        path = os.path.join(self._version_dir(v), _MANIFEST)
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
+    def _manifest(self, v: int) -> dict:
+        """The file manifest of version ``v``. Every published version
+        has one; version 0, before the first publish, lists no files.
+        An unknown version raises ``load_version``'s ``ValueError``."""
+        if v == 0:
+            return {table: [] for table in _STATS_KEY}
+        try:
+            with open(os.path.join(self._version_dir(v), _MANIFEST)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise ValueError(f"version {v} not found (vacuumed?)") from None
 
-    def pruned_files(self, table: str, values: list[str], version: int | None = None) -> tuple[list[str], int] | None:
+    def pruned_files(self, table: str, values: list[str], version: int | None = None) -> tuple[list[str], int]:
         """Paths (relative to the version directory, as the manifest
         records them) of the files whose key range may contain any of
-        ``values``, and the total file count -- or ``None`` when no
-        manifest exists (pre-manifest snapshot: caller falls back to a
-        full scan)."""
+        ``values``, and the total file count."""
         v = self.current_version() if version is None else version
-        manifest = self._manifest(v)
-        if manifest is None or table not in manifest:
-            return None
-        entries = manifest[table]
+        entries = self._manifest(v)[table]
         return [e["path"] for e in _prune(entries, values)], len(entries)
 
     def lookup_nodes(self, spark: SparkSession, gids: list[str], version: int | None = None) -> DataFrame:
@@ -409,11 +408,8 @@ class ParquetGraphStorage:
         to Neo4j's gid index (``neo4j.go:21``, ``neo4j.go:97``).
         """
         v = self.current_version() if version is None else version
-        pruned = self.pruned_files("nodes", gids, v)
-        if pruned is None:
-            nodes = self.load_version(spark, v).nodes
-        else:
-            nodes = _read_table(spark, self._version_dir(v), "nodes", pruned[0])
+        files, _ = self.pruned_files("nodes", gids, v)
+        nodes = _read_table(spark, self._version_dir(v), "nodes", files)
         return nodes.where(isin_keys("gid", gids))
 
     # -- pruned MERGE commit (the write-side payoff of C6) --------------
@@ -445,12 +441,11 @@ class ParquetGraphStorage:
           tombstoned id (detach removes edges in either direction).
 
         The batch is collected to the driver once (``CollectedBatch``, at
-        most ``MERGE_MAX_BATCH_ROWS`` distinct gids; a larger batch, or a
-        base without a manifest, takes the full ``apply_batch`` +
-        full-snapshot path). The selected subset is loaded as a
-        miniature GraphStore and ``GraphStore.apply_collected`` applies
-        the batch to it from driver-side key sets: one lookup of the hit
-        node files, then one write per table whose only joins are
+        most ``MERGE_MAX_BATCH_ROWS`` distinct gids; a larger batch takes
+        the full ``apply_batch`` + full-snapshot path). The selected subset
+        is loaded as a miniature GraphStore and ``GraphStore.apply_collected``
+        applies the batch to it from driver-side key sets: one lookup of the
+        hit node files, then one write per table whose only joins are
         broadcasts of driver-built key frames. It is a second body of
         ``apply_batch``'s semantics, so any change to either must keep
         the differential test against the full path passing
@@ -467,6 +462,17 @@ class ParquetGraphStorage:
             lambda base, vdir: self._write_merge(spark, vdir, base, batch, label, source)
         )
 
+    def wipe_merge_commit(
+        self, spark: SparkSession, batch: DataFrame, label: str, source: str
+    ) -> int:
+        """A full sync's start batch: ``delete_all(label, source)`` on the
+        base, then ``batch`` merged, published as ONE version, so no reader
+        sees the dataset wiped but not yet reloaded (SURVEY §3.3). The wipe
+        may touch any file, so every file is rewritten."""
+        return self._publish_build(
+            lambda base, vdir: self._write_merge(spark, vdir, base, batch, label, source, True)
+        )
+
     def _write_merge(
         self,
         spark: SparkSession,
@@ -475,18 +481,22 @@ class ParquetGraphStorage:
         batch: DataFrame,
         label: str,
         source: str,
+        wipe: bool = False,
     ) -> None:
         """Write version ``base`` with ``batch`` applied into ``vdir``:
-        rewrite the files the batch's keys hit, hard-link the rest. Falls
-        back to a full snapshot when ``base`` has no manifest or the batch
-        is too large to key-collect driver-side."""
+        rewrite the files the batch's keys hit, hard-link the rest. With
+        ``wipe``, ``delete_all(label, source)`` runs on the whole base
+        first and every file is rewritten. A batch too large to
+        key-collect driver-side takes the full ``apply_batch`` path."""
+        collected = CollectedBatch.collect(batch, self.MERGE_MAX_BATCH_ROWS)
+        if collected is None or wipe:
+            full = self.load_version(spark, base)
+            if wipe:
+                full = full.delete_all(label, source)
+            if collected is None:
+                return self._write_snapshot(vdir, full.apply_batch(batch, label, source))
+            return self._write_snapshot(vdir, full.apply_collected(collected, label, source))
         manifest = self._manifest(base)
-        collected = None if manifest is None else CollectedBatch.collect(
-            batch, self.MERGE_MAX_BATCH_ROWS
-        )
-        if collected is None:
-            full = self.load_version(spark, base).apply_batch(batch, label, source)
-            return self._write_snapshot(vdir, full)
         dead, live = collected.dead, list(collected.live)
         node_keys = dead + live + collected.targets
         base_dir = self._version_dir(base)
@@ -528,14 +538,14 @@ class ParquetGraphStorage:
         cluster_buckets: int | None = None,
     ) -> int:
         """Publish ``fn(base)`` as a full snapshot, where ``base`` is the
-        snapshot of the version it publishes on: the full-sync wipe, a
-        Cypher write and compaction. Like a merge, the rewrite is derived
-        from its base version, so a batch published between a caller's
-        read and this publish is never dropped: the ``parquet`` lock
-        orders the build after every earlier publish, and the ``txnlog``
-        backend rebuilds it on the winner's snapshot. ``fn`` runs inside
-        the publish step, so if it raises nothing is published.
-        ``cluster_buckets`` is ``commit``'s."""
+        snapshot of the version it publishes on: the wipe of an empty
+        full-sync start batch, a Cypher write and compaction. Like a
+        merge, the rewrite is derived from its base version, so a batch
+        published between a caller's read and this publish is never
+        dropped: the ``parquet`` lock orders the build after every
+        earlier publish, and the ``txnlog`` backend rebuilds it on the
+        winner's snapshot. ``fn`` runs inside the publish step, so if it
+        raises nothing is published. ``cluster_buckets`` is ``commit``'s."""
         return self._publish_build(
             lambda base, vdir: self._write_snapshot(
                 vdir, fn(self.load_version(spark, base)), cluster_buckets
@@ -589,14 +599,12 @@ class TxnLogGraphStorage(ParquetGraphStorage):
       (``_put_if_absent``); on object storage the same slot maps to a
       conditional put (If-None-Match), which is exactly Delta's commit
       primitive;
-    - a writer that loses the race re-reads the new current version
-      and retries. A build derived from the base version
-      (``merge_commit``, ``rewrite``, ``compact``) is discarded and
-      rebuilt on the winner's snapshot, so both batches survive (the
-      reference's serialized per-batch transactions,
-      ``neo4j.go:238-284``). A caller-built ``commit(store)`` (a bulk
-      load) is self-contained, so it is re-published at the next slot
-      without a rewrite (last-writer-wins, as in the base class).
+    - a writer that loses the race re-reads the new current version,
+      discards its build and rebuilds it on the winner's snapshot, so
+      both batches survive (the reference's serialized per-batch
+      transactions, ``neo4j.go:238-284``). A caller-built
+      ``commit(store)`` ignores its base, so its rebuild writes the
+      same table again (last writer wins, as in the base class).
 
     Everything above the commit protocol — the snapshot builders,
     manifest stats, pruned merge, clustering, compaction, time travel —
@@ -648,12 +656,11 @@ class TxnLogGraphStorage(ParquetGraphStorage):
 
     # -- commits ---------------------------------------------------------
 
-    def _publish_build(self, build: Callable[[int, str], None], derived: bool = True) -> int:
+    def _publish_build(self, build: Callable[[int, str], None]) -> int:
         """The ``txnlog`` publish step: ``build(base, vdir)`` into a fresh
         ``d-<uuid>`` (expensive, uncoordinated), then put log slot
-        ``base+1``. On a lost race a ``derived`` build is discarded and
-        rebuilt on the winner's snapshot; otherwise the same self-contained
-        directory is re-published at the next slot."""
+        ``base+1``. On a lost race the build is discarded and rebuilt on
+        the winner's snapshot."""
 
         def build_new(base: int) -> str:
             dirname = f"d-{uuid.uuid4().hex}"
@@ -668,9 +675,8 @@ class TxnLogGraphStorage(ParquetGraphStorage):
             if self._publish(base + 1, dirname):
                 return self._finalize_publish(base + 1, dirname, lambda: build_new(base))
             base = self.current_version()
-            if derived:
-                shutil.rmtree(os.path.join(self.root, dirname), ignore_errors=True)
-                dirname = build_new(base)
+            shutil.rmtree(os.path.join(self.root, dirname), ignore_errors=True)
+            dirname = build_new(base)
 
     def _touch_publish_dir(self, dirname: str) -> bool:
         """Restart ``gc_orphans``' min-age clock on the about-to-publish

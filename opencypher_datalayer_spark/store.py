@@ -14,8 +14,8 @@ Here each template is a set-oriented DataFrame transform; one
 transaction was. The same semantics has two bodies:
 
 - ``apply_batch``, the full/bulk path: the batch stays a DataFrame, so
-  it scales to any batch size. The in-memory ``DataLayer``, bulk loads
-  and the storage layer's over-budget fallback run it.
+  it scales to any batch size. Bulk loads and the storage layer's
+  over-budget fallback run it.
 - ``apply_collected``, the served merge: a batch small enough to
   collect (``CollectedBatch``) is resolved on the driver into key sets,
   so a commit pays a few Spark jobs instead of a pipeline of

@@ -1,8 +1,8 @@
 """The served gid key-set read path: ``functions.pushdown.isin_keys`` is
 the one builder of a key-list filter. Keys are arbitrary text (gids are
 URIs), so each must round-trip exactly through every served read --
-``storage.lookup_nodes``, ``DataLayer.get_entities`` in both modes and
-the entity feed's ref rebuild -- and the lookup must still reach the
+``storage.lookup_nodes``, ``DataLayer.get_entities`` and the entity
+feed's ref rebuild -- and the lookup must still reach the
 parquet scan as a pushed-down ``In`` filter."""
 
 import ast
@@ -66,12 +66,6 @@ def test_keys_round_trip_through_durable_lookups(spark, tmp_path):
 
     plan = storage.lookup_nodes(spark, KEYS)._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [In(gid" in plan, plan
-
-
-def test_keys_round_trip_through_in_memory_lookup(spark):
-    layer = DataLayer(spark, CONFIG)
-    _write(layer, _entities())
-    _assert_round_trip(layer.get_entities)
 
 
 def test_keys_round_trip_through_entity_feed_refs(spark, tmp_path):

@@ -148,8 +148,9 @@ def test_unclustered_commit_still_has_manifest(spark, tmp_path):
 
 
 def test_get_entities_point_lookup_both_modes(spark, tmp_path):
-    """DataLayer.get_entities: storage-backed path uses manifest file
-    skipping; in-memory path filters the snapshot. Same results."""
+    """DataLayer.get_entities uses manifest file skipping, on a
+    configured root and on the temporary root of a layer without one.
+    Same results."""
     for root in (str(tmp_path / "store"), None):
         layer = DataLayer(spark, CONFIG, storage_root=root)
         _write(layer, [

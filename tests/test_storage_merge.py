@@ -532,3 +532,43 @@ def test_merge_commit_job_count_is_pinned(spark, tmp_path):
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= 10, jobs
     assert _snapshot(spark, storage, 2) == expected
+
+
+def test_first_batch_into_a_fresh_root_takes_the_key_set_merge(spark, tmp_path, backend, monkeypatch):
+    """Version 0 has an (empty) manifest, so the first batch into a fresh
+    root is a served merge like any other: ``apply_collected``, never
+    the over-budget ``apply_batch``."""
+    storage = open_storage(str(tmp_path / "s"), backend)
+    ran = []
+
+    def spy(name):
+        body = getattr(GraphStore, name)
+
+        def traced(self, *args):
+            ran.append(name)
+            return body(self, *args)
+
+        return traced
+
+    for name in ("apply_batch", "apply_collected"):
+        monkeypatch.setattr(GraphStore, name, spy(name))
+    batch = _batch(spark, [{"id": f"{NS}/a", "props": {}, "refs": {f"{NS}/r": f"{NS}/b"}}])
+    storage.merge_commit(spark, batch, "P", "s")
+    assert ran == ["apply_collected"]
+    assert _snapshot(spark, storage, 1) == (
+        {(f"{NS}/a", "P", ("P",), "s", ()), (f"{NS}/b", None, (), None, ())},
+        {(f"{NS}/a", "r", f"{NS}/b", "s")},
+    )
+
+
+def test_every_version_has_a_manifest(spark, tmp_path, backend):
+    """Version 0 lists no files; an unknown version raises like
+    ``load_version`` does."""
+    storage = open_storage(str(tmp_path / "s"), backend)
+    assert storage._manifest(0) == {"nodes": [], "edges": []}
+    assert storage.pruned_files("nodes", [f"{NS}/a"]) == ([], 0)
+    for v in (1, 7):
+        with pytest.raises(ValueError, match=f"version {v} not found"):
+            storage._manifest(v)
+        with pytest.raises(ValueError, match=f"version {v} not found"):
+            storage.load_version(spark, v)

@@ -208,8 +208,9 @@ def test_delete_all_wipes_only_label_and_source(spark):
     wc.write({"id": f"{NS}/things/acme", "props": {f"{NS}/name": "Acme"}, "refs": {}})
     wc.close()
 
-    # start a fullsync of people: wipes Person/people, leaves companies + stub
-    layer.dataset("people").full_sync(BatchInfo(sync_id="s", is_start_batch=True))
+    # an empty start batch of people: its close wipes Person/people,
+    # leaves companies + stub
+    layer.dataset("people").full_sync(BatchInfo(sync_id="s", is_start_batch=True)).close()
     nodes = node_map(layer.store)
     assert f"{NS}/things/1" not in nodes
     assert f"{NS}/things/acme" in nodes

@@ -12,6 +12,8 @@ A second property holds the served merge to the full path: the same
 batch sequences through ``storage.merge_commit`` (the key-set body,
 ``GraphStore.apply_collected``, on the files the batch hits) and
 through ``apply_batch`` must give identical graphs, label sets included.
+A batch may open a full sync: ``storage.wipe_merge_commit`` against
+``delete_all`` then ``apply_batch``.
 """
 
 import uuid
@@ -150,7 +152,11 @@ merge_entity_st = st.fixed_dictionaries(
     }
 )
 merge_batches_st = st.lists(
-    st.tuples(st.sampled_from(DATASETS), st.lists(merge_entity_st, min_size=1, max_size=5)),
+    st.tuples(
+        st.sampled_from(DATASETS),
+        st.booleans(),  # the batch opens a full sync: wipe its dataset first
+        st.lists(merge_entity_st, min_size=1, max_size=5),
+    ),
     min_size=1,
     max_size=3,
 )
@@ -184,6 +190,7 @@ def _graph(store):
     batches=[
         (
             ("Q", "t"),
+            False,
             [
                 # self-loop, a None prop, a new stub; g0 gains label Q
                 _ent("g0", {"ns/name": None}, {"ns/knows": ["g0", "g4"]}),
@@ -198,7 +205,11 @@ def _graph(store):
             ],
         ),
         # a ref to a gid tombstoned in an earlier batch
-        (("P", "s"), [_ent("g5", {}, {"ns/knows": ["g3", "g5"]})]),
+        (("P", "s"), False, [_ent("g5", {}, {"ns/knows": ["g3", "g5"]})]),
+        # a full sync of P/s drops g5 and its edges but keeps g0 and g1
+        # (labelled P too, but of source t) and the null-label stubs g2
+        # and g3; g5 comes back as a stub
+        (("P", "s"), True, [_ent("g4", {}, {"ns/knows": ["g5"]})]),
     ]
 )
 def test_merge_commit_matches_apply_batch(spark, tmp_path, batches):
@@ -211,8 +222,12 @@ def test_merge_commit_matches_apply_batch(spark, tmp_path, batches):
     storage = open_storage(str(tmp_path / uuid.uuid4().hex))
     storage.commit(seed, cluster_buckets=2)  # several files, so merges prune
     full = storage.load(spark).checkpointed()
-    for (label, source), batch in batches:
+    for (label, source), wipe, batch in batches:
         df = _entity_df(spark, batch)
+        if wipe:
+            full = full.delete_all(label, source)
+            storage.wipe_merge_commit(spark, df, label, source)
+        else:
+            storage.merge_commit(spark, df, label, source)
         full = full.apply_batch(df, label, source).checkpointed()
-        storage.merge_commit(spark, df, label, source)
     assert _graph(storage.load(spark)) == _graph(full)

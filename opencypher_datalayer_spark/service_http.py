@@ -303,8 +303,9 @@ def main(argv: list[str] | None = None, wait: bool = True) -> "UdaService":
     listen port comes from the config's ``layer_config.port`` (the
     reference's service-runner key; 0 = pick a free port), overridable
     via ``DATALAYER_PORT``; ``DATALAYER_STORAGE_ROOT`` is the storage
-    root (unset = a temporary root, removed at exit). With ``wait=False`` returns the
-    started service (tests drive it this way)."""
+    root (unset = a temporary root, removed at exit). With
+    ``wait=False`` returns the started service (tests drive it this
+    way)."""
     import json as _json
     import os
     import threading as _threading

@@ -59,7 +59,7 @@ def test_keys_round_trip_through_durable_lookups(spark, tmp_path):
     layer = DataLayer(spark, CONFIG, storage_root=str(tmp_path / "s"))
     _write(layer, _entities())
     storage = layer._storage
-    assert storage.pruned_files("nodes", KEYS) is not None  # the pruned path
+    assert storage.pruned_files("nodes", KEYS)[0]  # the lookup reads manifest-listed files
 
     _assert_round_trip(lambda keys: storage.lookup_nodes(spark, keys))
     _assert_round_trip(layer.get_entities)

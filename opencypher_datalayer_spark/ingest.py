@@ -146,14 +146,13 @@ class DataLayer:
         spark: SparkSession,
         config: dict | None = None,
         storage_root: str | None = None,
-        storage_backend: str = "parquet",
     ):
         self.spark = spark
         self.datasets: dict[str, DatasetConfig] = {}
         if not storage_root:
             storage_root = tempfile.mkdtemp(prefix="datalayer-")
             atexit.register(shutil.rmtree, storage_root, True)
-        self._storage = open_storage(storage_root, storage_backend)
+        self._storage = open_storage(storage_root)
         # the newest loaded snapshot and its version, replaced only by
         # ``_snapshot`` (version 0 is empty)
         self._version, self._store = 0, GraphStore.empty(spark)

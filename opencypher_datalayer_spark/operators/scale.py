@@ -70,10 +70,6 @@ def rebalance_for_inflation(
     core). At sf10 (500k docs, 150M-shingle explode) the same gate
     passes by 4 orders of magnitude and the repartition is what keeps
     31 of 32 cores from idling."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_REBALANCE", "1") == "0":  # A/B kill switch
-        return df
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     files = df.inputFiles()
@@ -82,7 +78,7 @@ def rebalance_for_inflation(
     if _effective_splits(files, cores) >= cores:
         return df  # healthy layout: scan already feeds every core
     rows = _total_rows(files)
-    if rows * work_per_row < _min_inflated_work():
+    if rows * work_per_row < MIN_INFLATED_WORK:
         return df  # stage is cheap even single-core; shuffle not worth it
     # exactly `cores` output partitions measured best: more tasks
     # only add per-task/Arrow-batch overhead once every core is
@@ -100,11 +96,7 @@ def rebalance_rows(df: DataFrame, n_rows: int, work_per_row: int = 1) -> DataFra
     rehearsal motivated this: a file-source micro-batch arrives as ONE
     file, and the 30x shingle explode then ran 125k docs on a single
     core (73.3 s vs 7.0 s re-split, measured)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_REBALANCE", "1") == "0":  # A/B kill switch
-        return df
-    if n_rows * work_per_row < _min_inflated_work():
+    if n_rows * work_per_row < MIN_INFLATED_WORK:
         return df
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
@@ -130,12 +122,6 @@ def parallel_dedup(df: DataFrame, *cols: str) -> DataFrame:
 # inflation), a single core finishes the stage faster than an exchange
 # round-trip costs. 8M units ~ a few hundred ms of vectorized JVM work.
 MIN_INFLATED_WORK = 8_000_000
-
-
-def _min_inflated_work() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_REBALANCE_MIN_WORK", MIN_INFLATED_WORK))
 
 
 # path -> (mtime_ns, size, num_row_groups, num_rows); keyed by path so a

@@ -1,28 +1,18 @@
-"""Durable storage for the graph: versioned parquet snapshots with an
-atomic CURRENT pointer — a minimal table format.
+"""Durable storage for the graph: versioned parquet snapshots published
+through an append-only transaction log -- a minimal table format.
 
 The reference got atomicity from Neo4j's per-batch transaction
 (``neo4j.go:238-284``) and full-sync wipes were *not* atomic across the
 sync (readers between wipe and load saw an empty dataset — SURVEY §3.3).
-Here every commit is a new immutable version directory plus an atomic
-rename of the pointer file, so readers always see a complete snapshot,
-and a full sync's wipe is published with its first batch
+Here every commit is a new immutable data directory plus one
+put-if-absent log entry, so readers always see a complete snapshot, and
+a full sync's wipe is published with its first batch
 (``wipe_merge_commit``) — same semantics, visibility gap fixed.
 
 On a cluster this role is played by Delta/Iceberg (not on this image);
 the interface is kept small so a Delta-backed implementation can drop in.
 
-Layout (``parquet`` backend)::
-
-    root/
-      v00000001/nodes/*.parquet
-      v00000001/edges/*.parquet
-      v00000001/MANIFEST.json
-      v00000002/...
-      CURRENT            # text: version number of the live snapshot
-      COMMIT.lock        # O_EXCL writer claim, present only during a commit
-
-Layout (``txnlog`` backend)::
+Layout::
 
     root/
       d-<uuid>/nodes/*.parquet   # one immutable data dir per snapshot
@@ -30,12 +20,14 @@ Layout (``txnlog`` backend)::
       d-<uuid>/MANIFEST.json
       _log/00000001.json         # {"version": 1, "dir": "d-<uuid>"}
       _log/00000002.json         # current version = highest log entry
+      COMMIT.lock                # O_EXCL writer claim, present only during a commit
 
-Both backends write a snapshot with the same two builders -- a full
-snapshot (``_write_snapshot``) or a pruned MERGE on a base version
-(``_write_merge``) -- into a directory they are handed. A backend is
-only its publish step (``_publish_build``): where that directory lives
-and how it becomes the current version.
+A snapshot is written by one of two builders -- a full snapshot
+(``_write_snapshot``) or a pruned MERGE on a base version
+(``_write_merge``) -- into a fresh data directory, and ``_publish_build``
+makes it the next version. The log format (``_log_slots``,
+``_log_entry_dir``, ``_log_put``) is shared with
+``operators/artifacts.py``.
 
 Writes are partitioned by ``label`` (nodes) / ``rel_type`` (edges) so
 label scans and per-type edge reads partition-prune (the analog of the
@@ -59,9 +51,9 @@ from opencypher_datalayer_spark.functions.pushdown import isin_keys
 from opencypher_datalayer_spark.model import EDGES_SCHEMA, NODES_SCHEMA
 from opencypher_datalayer_spark.store import CollectedBatch, GraphStore, labels_expr
 
-_CURRENT = "CURRENT"
 _MANIFEST = "MANIFEST.json"
 _LOCK = "COMMIT.lock"
+_LOG = "_log"
 
 # Key column used for file-skipping stats per table (the reference's only
 # index is on ``gid`` — ``neo4j.go:21``; edges are looked up by src gid in
@@ -89,8 +81,10 @@ def _put_if_absent(path: str, text: str) -> bool:
     iff this call created it. The NFS-safe hard-link protocol (open(2)
     NOTES): write a unique temp file, ``link()`` it to the target and
     trust ``st_nlink == 2`` -- correct even when the link RPC's reply is
-    lost and retried. On object storage the same step is a conditional
-    put (If-None-Match)."""
+    lost and retried. A link that failed and did not land while the
+    target is still absent (EPERM on a filesystem without hard links)
+    raises: it is no lost race, and retrying would never end. On object
+    storage the same step is a conditional put (If-None-Match)."""
     tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
     with open(tmp, "w") as f:
         f.write(text)
@@ -103,9 +97,47 @@ def _put_if_absent(path: str, text: str) -> bool:
         except OSError:
             # NFS: the link may have succeeded even though the retried
             # RPC reported an error -- nlink is the truth
-            return os.stat(tmp).st_nlink == 2
+            if os.stat(tmp).st_nlink == 2:
+                return True
+            if not os.path.exists(path):
+                raise
+            return False
     finally:
         os.unlink(tmp)
+
+
+# The transaction log: version N is published by putting
+# ``_log/{N:08d}.json`` = {"version": N, "dir": <data dir name>} with
+# ``_put_if_absent``, so a taken slot is a lost race and the current
+# version is the highest slot. Both stores publish through these three.
+
+
+def _log_path(log_dir: str, v: int) -> str:
+    return os.path.join(log_dir, f"{v:08d}.json")
+
+
+def _log_slots(log_dir: str) -> list[int]:
+    """The log's versions in ascending order (none if the log is absent)."""
+    try:
+        names = os.listdir(log_dir)
+    except FileNotFoundError:
+        return []
+    return sorted(int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit())
+
+
+def _log_entry_dir(log_dir: str, v: int) -> str | None:
+    """The data directory name version ``v`` records, or None if the
+    slot is empty or unreadable."""
+    try:
+        with open(_log_path(log_dir, v)) as f:
+            return json.load(f)["dir"]
+    except (OSError, ValueError, KeyError):
+        return None
+
+
+def _log_put(log_dir: str, v: int, dirname: str) -> bool:
+    """Publish ``dirname`` as version ``v``; True iff this call won the slot."""
+    return _put_if_absent(_log_path(log_dir, v), json.dumps({"version": v, "dir": dirname}))
 
 
 def _link_or_copy(src: str, dst: str) -> None:
@@ -199,37 +231,45 @@ def _read_table(
 
 
 class ParquetGraphStorage:
+    """The graph's versioned snapshots under ``root``: immutable
+    ``d-<uuid>`` data directories, each published as one version of the
+    ``_log`` (layout in the module docstring). Readers resolve the
+    current version with one listing of the log and never block."""
+
     def __init__(self, root: str):
         self.root = root
-        os.makedirs(root, exist_ok=True)
+        self._log = os.path.join(root, _LOG)
+        os.makedirs(self._log, exist_ok=True)
+        self._dir_cache: dict[int, str] = {}
 
     # -- versions ------------------------------------------------------
 
     def current_version(self) -> int:
-        path = os.path.join(self.root, _CURRENT)
-        if not os.path.exists(path):
-            return 0
-        with open(path) as f:
-            return int(f.read().strip())
+        return max(_log_slots(self._log), default=0)
 
     def _version_dir(self, version: int) -> str:
-        return os.path.join(self.root, f"v{version:08d}")
+        if version in self._dir_cache:
+            return self._dir_cache[version]
+        name = _log_entry_dir(self._log, version)
+        if name is None:
+            # unknown version: a path that cannot exist, so callers'
+            # isdir/open probes fail
+            return os.path.join(self.root, f"_missing-v{version}")
+        vdir = self._dir_cache[version] = os.path.join(self.root, name)
+        return vdir
 
     # -- writer serialization ------------------------------------------
 
     # The reference inherits per-batch transactions from Neo4j
-    # (neo4j.go:238-284); here concurrent writers are serialized with an
-    # O_EXCL lock-file claim so two simultaneous commits can't both read
-    # version v and publish conflicting v+1 snapshots (one batch would
-    # silently vanish). The loser spins with backoff and then commits on
-    # top of the winner's version — both batches survive, versions stay
-    # linear. A writer that dies mid-commit leaves a lock that is broken
-    # after ``stale_after`` (the claim records pid + wall time).
-    #
-    # SCOPE: this lock is SINGLE-HOST. O_EXCL is not reliable on NFS and
-    # has no analog on object storage — for multi-host writers use the
-    # ``txnlog`` backend (TxnLogGraphStorage), whose put-if-absent log
-    # publish replaces both this lock and the mutable CURRENT pointer.
+    # (neo4j.go:238-284). Here the log's put-if-absent alone keeps
+    # versions linear: a writer that loses slot base+1 rebuilds on the
+    # winner's snapshot, so both batches survive. Writers on one host
+    # also take an O_EXCL lock-file claim around the whole build and
+    # publish, so they queue instead of building twice and throwing one
+    # build away. A writer that dies mid-commit leaves a claim that is
+    # broken after ``stale_after`` (the claim records pid + wall time).
+    # O_EXCL is not reliable on NFS, so writers on other hosts are
+    # ordered by the log only.
 
     def _acquire_commit_lock(self, timeout: float = 300.0, stale_after: float = 600.0) -> None:
         path = os.path.join(self.root, _LOCK)
@@ -300,22 +340,61 @@ class ParquetGraphStorage:
         )
 
     def _publish_build(self, build: Callable[[int, str], None]) -> int:
-        """The ``parquet`` publish step: under the commit lock, let base =
-        the current version, ``build(base, vdir)`` into ``v{base+1}`` and
-        swap CURRENT atomically. The lock orders the build after every
-        earlier publish."""
+        """The publish step: under the commit lock, let base = the current
+        version, ``build(base, vdir)`` into a fresh ``d-<uuid>``, then put
+        log slot ``base+1``. Only a writer on another host can take the
+        slot first; then the build is discarded and rebuilt on the
+        winner's snapshot. A build that raises leaves no data dir."""
+
+        def build_new(base: int) -> str:
+            dirname = f"d-{uuid.uuid4().hex}"
+            try:
+                build(base, os.path.join(self.root, dirname))
+            except BaseException:
+                shutil.rmtree(os.path.join(self.root, dirname), ignore_errors=True)
+                raise
+            return dirname
+
         self._acquire_commit_lock()
         try:
-            v = self.current_version() + 1
-            vdir = self._version_dir(v)
-            # a writer that died before its CURRENT swap leaves v{N+1}
-            # behind; it was never published, so start from empty
-            shutil.rmtree(vdir, ignore_errors=True)
-            build(v - 1, vdir)
-            _replace_file(os.path.join(self.root, _CURRENT), str(v))
-            return v
+            base = self.current_version()
+            dirname = build_new(base)
+            while True:
+                if not self._touch_publish_dir(dirname):
+                    dirname = build_new(base)  # collected by GC during a long stall
+                if _log_put(self._log, base + 1, dirname):
+                    return self._finalize_publish(base + 1, dirname, lambda: build_new(base))
+                shutil.rmtree(os.path.join(self.root, dirname), ignore_errors=True)
+                base = self.current_version()
+                dirname = build_new(base)
         finally:
             self._release_commit_lock()
+
+    def _touch_publish_dir(self, dirname: str) -> bool:
+        """Restart ``gc_orphans``' min-age clock on the about-to-publish
+        data dir. False iff the dir is already gone — a writer stalled
+        past ``min_age_s`` whose dir GC collected must rebuild before
+        publishing."""
+        try:
+            os.utime(os.path.join(self.root, dirname))
+            return True
+        except OSError:
+            return False
+
+    def _finalize_publish(self, v: int, dirname: str, rebuild) -> int:
+        """Close the remaining ``gc_orphans`` race: if GC collected the
+        data dir in the sliver between the utime guard and the log put,
+        the freshly-won entry points at nothing and every reader of
+        version ``v`` would break. Rebuild the content and atomically
+        rewrite OUR OWN slot — safe because the put-if-absent means no
+        other writer ever writes slot ``v``."""
+        if os.path.isdir(os.path.join(self.root, dirname)):
+            return v
+        _replace_file(
+            _log_path(self._log, v), json.dumps({"version": v, "dir": rebuild()})
+        )
+        self._dir_cache.pop(v, None)
+        return v
 
     # -- snapshot builders: write one snapshot into a given directory ----
 
@@ -542,10 +621,11 @@ class ParquetGraphStorage:
         full-sync start batch, a Cypher write and compaction. Like a
         merge, the rewrite is derived from its base version, so a batch
         published between a caller's read and this publish is never
-        dropped: the ``parquet`` lock orders the build after every
-        earlier publish, and the ``txnlog`` backend rebuilds it on the
-        winner's snapshot. ``fn`` runs inside the publish step, so if it
-        raises nothing is published. ``cluster_buckets`` is ``commit``'s."""
+        dropped: the commit lock orders the build after every earlier
+        publish on this host, and a build that loses its log slot to
+        another host is rebuilt on the winner's snapshot. ``fn`` runs
+        inside the publish step, so if it raises nothing is published.
+        ``cluster_buckets`` is ``commit``'s."""
         return self._publish_build(
             lambda base, vdir: self._write_snapshot(
                 vdir, fn(self.load_version(spark, base)), cluster_buckets
@@ -569,186 +649,39 @@ class ParquetGraphStorage:
         return len(glob.glob(os.path.join(tdir, "**", "*.parquet"), recursive=True))
 
     def vacuum(self, keep: int = 2) -> None:
-        """Drop version directories older than the newest ``keep``."""
-        current = self.current_version()
-        for name in sorted(os.listdir(self.root)):
-            if name.startswith("v") and name[1:].isdigit():
-                v = int(name[1:])
-                if v <= current - keep:
-                    shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
-
-
-class TxnLogGraphStorage(ParquetGraphStorage):
-    """Transactional-manifest backend: multi-host commit safety without
-    the O_EXCL lock file or the mutable CURRENT pointer.
-
-    The base class is correct on one host but its two coordination
-    primitives degrade on shared filesystems: O_EXCL is not reliable on
-    NFS, and a mutable pointer file has no atomic read-modify-write on
-    object storage. This backend replaces both with a Delta-style
-    append-only transaction log — the same protocol a lakehouse table
-    format uses, expressed on a filesystem:
-
-    - every snapshot's data lives in a uniquely-named immutable
-      directory (``d-<uuid>``), written BEFORE any coordination;
-    - version N is published by creating ``_log/{N:08d}.json``
-      (recording the data directory) with a put-if-absent primitive;
-      the reader's current version is simply the highest log entry —
-      readers never block and never see a partial commit;
-    - put-if-absent is the NFS-safe hard-link protocol
-      (``_put_if_absent``); on object storage the same slot maps to a
-      conditional put (If-None-Match), which is exactly Delta's commit
-      primitive;
-    - a writer that loses the race re-reads the new current version,
-      discards its build and rebuilds it on the winner's snapshot, so
-      both batches survive (the reference's serialized per-batch
-      transactions, ``neo4j.go:238-284``). A caller-built
-      ``commit(store)`` ignores its base, so its rebuild writes the
-      same table again (last writer wins, as in the base class).
-
-    Everything above the commit protocol — the snapshot builders,
-    manifest stats, pruned merge, clustering, compaction, time travel —
-    is inherited unchanged from ``ParquetGraphStorage``; this class
-    overrides only versions, directories, the log and its publish step.
-    """
-
-    _LOG = "_log"
-
-    def __init__(self, root: str):
-        super().__init__(root)
-        os.makedirs(os.path.join(root, self._LOG), exist_ok=True)
-        self._dir_cache: dict[int, str] = {}
-
-    # -- log ------------------------------------------------------------
-
-    def _log_path(self, v: int) -> str:
-        return os.path.join(self.root, self._LOG, f"{v:08d}.json")
-
-    def current_version(self) -> int:
-        versions = [
-            int(name[:-5])
-            for name in os.listdir(os.path.join(self.root, self._LOG))
-            if name.endswith(".json") and name[:-5].isdigit()
-        ]
-        return max(versions, default=0)
-
-    def _version_dir(self, version: int) -> str:
-        if version in self._dir_cache:
-            return self._dir_cache[version]
-        path = self._log_path(version)
-        try:
-            with open(path) as f:
-                entry = json.load(f)
-        except (FileNotFoundError, ValueError):
-            # unknown version: a path that cannot exist, so callers'
-            # isdir/exists probes fail the same way as in the base class
-            return os.path.join(self.root, f"_missing-v{version}")
-        vdir = os.path.join(self.root, entry["dir"])
-        self._dir_cache[version] = vdir
-        return vdir
-
-    def _publish(self, v: int, dirname: str) -> bool:
-        """Put-if-absent of the version-v log entry. True iff this
-        writer won slot v."""
-        return _put_if_absent(
-            self._log_path(v), json.dumps({"version": v, "dir": dirname})
-        )
-
-    # -- commits ---------------------------------------------------------
-
-    def _publish_build(self, build: Callable[[int, str], None]) -> int:
-        """The ``txnlog`` publish step: ``build(base, vdir)`` into a fresh
-        ``d-<uuid>`` (expensive, uncoordinated), then put log slot
-        ``base+1``. On a lost race the build is discarded and rebuilt on
-        the winner's snapshot."""
-
-        def build_new(base: int) -> str:
-            dirname = f"d-{uuid.uuid4().hex}"
-            build(base, os.path.join(self.root, dirname))
-            return dirname
-
-        base = self.current_version()
-        dirname = build_new(base)
-        while True:
-            if not self._touch_publish_dir(dirname):
-                dirname = build_new(base)  # collected by GC during a long stall
-            if self._publish(base + 1, dirname):
-                return self._finalize_publish(base + 1, dirname, lambda: build_new(base))
-            base = self.current_version()
-            shutil.rmtree(os.path.join(self.root, dirname), ignore_errors=True)
-            dirname = build_new(base)
-
-    def _touch_publish_dir(self, dirname: str) -> bool:
-        """Restart ``gc_orphans``' min-age clock on the about-to-publish
-        data dir. False iff the dir is already gone — a writer stalled
-        past ``min_age_s`` whose dir GC collected must rebuild before
-        publishing (ADVICE r6 #3)."""
-        try:
-            os.utime(os.path.join(self.root, dirname))
-            return True
-        except OSError:
-            return False
-
-    def _finalize_publish(self, v: int, dirname: str, rebuild) -> int:
-        """Close the remaining ``gc_orphans`` race: if GC collected the
-        data dir in the sliver between the utime guard and the log-entry
-        link, the freshly-won entry points at nothing and every reader
-        of version ``v`` would break. Rebuild the content and atomically
-        rewrite OUR OWN slot — safe because ``_publish``'s put-if-absent
-        means no other writer ever writes slot ``v``."""
-        if os.path.isdir(os.path.join(self.root, dirname)):
-            return v
-        _replace_file(
-            self._log_path(v), json.dumps({"version": v, "dir": rebuild()})
-        )
-        self._dir_cache.pop(v, None)
-        return v
-
-    def vacuum(self, keep: int = 2) -> None:
         """Drop data directories (and their log entries) older than the
         newest ``keep`` versions. Version numbering stays monotonic:
         current is the MAX log entry, which vacuum never removes."""
         current = self.current_version()
-        for v in range(1, current - keep + 1):
-            path = self._log_path(v)
-            try:
-                with open(path) as f:
-                    entry = json.load(f)
-            except (FileNotFoundError, ValueError):
-                continue
-            shutil.rmtree(os.path.join(self.root, entry["dir"]), ignore_errors=True)
-            os.unlink(path)
+        for v in _log_slots(self._log):
+            if v > current - keep:
+                break
+            name = _log_entry_dir(self._log, v)
+            if name is not None:
+                shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+            os.unlink(_log_path(self._log, v))
             self._dir_cache.pop(v, None)
 
     def gc_orphans(self, min_age_s: float = 3600.0) -> list[str]:
         """Remove ``d-<uuid>`` data directories referenced by NO log
-        entry — the residue of a writer killed between its (expensive,
-        uncoordinated) data write and the (cheap) ``_publish``, or of a
-        lost merge race whose cleanup was interrupted. Orphans are
-        invisible to readers (the log is the only path to data), so
-        removing a TRUE orphan is pure space reclamation.
+        entry — the residue of a writer killed between its (expensive)
+        data write and the (cheap) log put, or of a lost merge race
+        whose cleanup was interrupted. Orphans are invisible to readers
+        (the log is the only path to data), so removing a TRUE orphan is
+        pure space reclamation.
 
         ``min_age_s`` guards the racy window: a LIVE writer that has
         written its directory but not yet published looks like an
         orphan. Misidentifying it is worse than lost work — the
-        writer's publish would still win and point CURRENT at a deleted
-        directory — so the commit path defends in depth: it
+        writer's publish would still win and point its version at a
+        deleted directory — so the commit path defends in depth: it
         ``os.utime``-refreshes the dir immediately before publishing
         (``_touch_publish_dir``, restarting this age clock), and after
         winning the slot re-verifies the dir and rebuilds + rewrites
         its own log entry if GC got it anyway (``_finalize_publish``).
         A stalled writer therefore never leaves a dangling published
         version. Returns the removed directory names."""
-        referenced: set[str] = set()
-        log_dir = os.path.join(self.root, self._LOG)
-        for name in os.listdir(log_dir):
-            if not (name.endswith(".json") and name[:-5].isdigit()):
-                continue
-            try:
-                with open(os.path.join(log_dir, name)) as f:
-                    referenced.add(json.load(f)["dir"])
-            except (ValueError, KeyError, OSError):
-                continue
+        referenced = {_log_entry_dir(self._log, v) for v in _log_slots(self._log)}
         removed: list[str] = []
         now = time.time()
         for name in os.listdir(self.root):
@@ -765,17 +698,6 @@ class TxnLogGraphStorage(ParquetGraphStorage):
         return removed
 
 
-BACKENDS = {"parquet": ParquetGraphStorage, "txnlog": TxnLogGraphStorage}
-
-
-def open_storage(root: str, backend: str = "parquet") -> ParquetGraphStorage:
-    """Backend-selectable storage factory: ``parquet`` (versioned dirs +
-    CURRENT pointer + O_EXCL commit lock; single-host) or ``txnlog``
-    (append-only transaction log + put-if-absent publish; multi-host)."""
-    try:
-        cls = BACKENDS[backend]
-    except KeyError:
-        raise ValueError(
-            f"unknown storage backend {backend!r}; choose from {sorted(BACKENDS)}"
-        ) from None
-    return cls(root)
+def open_storage(root: str) -> ParquetGraphStorage:
+    """The graph storage at ``root``."""
+    return ParquetGraphStorage(root)

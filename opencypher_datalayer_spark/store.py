@@ -93,7 +93,7 @@ class GraphStore:
 
     Snapshot-per-commit is what a table format (Delta/Iceberg) gives on a
     cluster; the persistence half lives in ``storage.ParquetGraphStorage``
-    (versioned directories + atomic CURRENT pointer swap).
+    (immutable data directories published through a put-if-absent log).
     """
 
     nodes: DataFrame

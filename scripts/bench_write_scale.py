@@ -1,8 +1,8 @@
 """Write-path scale rehearsal (VERDICT r7 #4): fullsync + incremental +
-tombstone waves through ``merge_commit`` on both storage backends, at
-store sizes the query registry never exercises.
+tombstone waves through ``merge_commit``, at store sizes the query
+registry never exercises.
 
-Measures, per store size and backend:
+Measures, per store size:
 
 - bulk full-commit cost (the ``cy_write_roundtrip``-shape cost at
   1M-entity batches: the >MERGE_MAX_BATCH_ROWS fallback path);
@@ -18,7 +18,7 @@ Prints one JSON line per measurement and a summary for SCALE.md
 
 Usage:
     python scripts/bench_write_scale.py [--nodes 10000000] \
-        [--backend parquet|txnlog|both] [--waves 5] [--batch 10000]
+        [--waves 5] [--batch 10000]
 """
 
 from __future__ import annotations
@@ -106,11 +106,11 @@ def emit(rec: dict) -> None:
     print(json.dumps(rec), flush=True)
 
 
-def rehearse(spark: SparkSession, backend: str, n_nodes: int, waves: int,
+def rehearse(spark: SparkSession, n_nodes: int, waves: int,
              batch_rows: int, buckets: int, root_base: str) -> None:
-    root = os.path.join(root_base, f"store_{backend}")
+    root = os.path.join(root_base, "store")
     shutil.rmtree(root, ignore_errors=True)
-    storage = open_storage(root, backend)
+    storage = open_storage(root)
 
     # -- bulk load: the fullsync / >MERGE_MAX fallback path -------------
     t0 = time.perf_counter()
@@ -118,7 +118,7 @@ def rehearse(spark: SparkSession, backend: str, n_nodes: int, waves: int,
     store = GraphStore.empty(spark).apply_batch(bulk, "P", "wr")
     v = storage.commit(store, cluster_buckets=buckets)
     bulk_s = time.perf_counter() - t0
-    emit({"phase": "bulk_load", "backend": backend, "nodes": n_nodes,
+    emit({"phase": "bulk_load", "nodes": n_nodes,
           "sec": round(bulk_s, 1), **file_stats(storage, v)})
 
     # -- incremental pruned-MERGE waves ---------------------------------
@@ -130,7 +130,7 @@ def rehearse(spark: SparkSession, backend: str, n_nodes: int, waves: int,
         t0 = time.perf_counter()
         v = storage.merge_commit(spark, batch, "P", "wr")
         sec = time.perf_counter() - t0
-        emit({"phase": "merge_wave", "backend": backend, "wave": w,
+        emit({"phase": "merge_wave", "wave": w,
               "batch_rows": batch_rows, "sec": round(sec, 2),
               **file_stats(storage, v)})
 
@@ -140,7 +140,7 @@ def rehearse(spark: SparkSession, backend: str, n_nodes: int, waves: int,
     batch = gen_entities(spark, n_nodes // 4, big, n_nodes)
     t0 = time.perf_counter()
     v = storage.merge_commit(spark, batch, "P", "wr")
-    emit({"phase": "bulk_merge_fallback", "backend": backend, "batch_rows": big,
+    emit({"phase": "bulk_merge_fallback", "batch_rows": big,
           "sec": round(time.perf_counter() - t0, 1), **file_stats(storage, v)})
 
     # -- tombstone wave --------------------------------------------------
@@ -148,19 +148,19 @@ def rehearse(spark: SparkSession, backend: str, n_nodes: int, waves: int,
     batch = gen_tombstones(spark, sorted(set(dead)))
     t0 = time.perf_counter()
     v = storage.merge_commit(spark, batch, "P", "wr")
-    emit({"phase": "tombstone_wave", "backend": backend,
+    emit({"phase": "tombstone_wave",
           "batch_rows": len(set(dead)),
           "sec": round(time.perf_counter() - t0, 2), **file_stats(storage, v)})
 
     # -- compaction + post-compact merge ---------------------------------
     t0 = time.perf_counter()
     v = storage.compact(spark, cluster_buckets=buckets)
-    emit({"phase": "compact", "backend": backend,
+    emit({"phase": "compact",
           "sec": round(time.perf_counter() - t0, 1), **file_stats(storage, v)})
     batch = gen_entities(spark, n_nodes // 2, batch_rows, n_nodes)
     t0 = time.perf_counter()
     v = storage.merge_commit(spark, batch, "P", "wr")
-    emit({"phase": "merge_after_compact", "backend": backend,
+    emit({"phase": "merge_after_compact",
           "batch_rows": batch_rows,
           "sec": round(time.perf_counter() - t0, 2), **file_stats(storage, v)})
 
@@ -173,14 +173,11 @@ def main() -> None:
     ap.add_argument("--waves", type=int, default=5)
     ap.add_argument("--batch", type=int, default=10_000)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--backend", default="both")
     ap.add_argument("--root", default="")
     args = ap.parse_args()
     spark = get_spark(app_name="write_rehearsal")
     root_base = args.root or tempfile.mkdtemp(prefix="write_rehearsal_")
-    backends = ["parquet", "txnlog"] if args.backend == "both" else [args.backend]
-    for b in backends:
-        rehearse(spark, b, args.nodes, args.waves, args.batch, args.buckets, root_base)
+    rehearse(spark, args.nodes, args.waves, args.batch, args.buckets, root_base)
     shutil.rmtree(root_base, ignore_errors=True)
 
 

@@ -29,3 +29,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(params=["parquet", "txnlog"])
+def writers(request):
+    """Where a test's graph writers run, as a function that places one
+    storage handle. ``parquet``: on one host, so their commit lock
+    queues them and each build runs once. ``txnlog``: each handle on a
+    host of its own, which the O_EXCL lock cannot order, so only the
+    log's put-if-absent does and a build that loses its slot is rebuilt
+    on the winner's snapshot. (The ids are the names of the two storage
+    backends these cases ran on before the store had one protocol.)"""
+
+    def place(storage):
+        if request.param == "txnlog":
+            storage._acquire_commit_lock = lambda *a, **kw: None
+            storage._release_commit_lock = lambda: None
+        return storage
+
+    return place

@@ -1,8 +1,8 @@
 """Hypothesis model of the artifact-store lifecycle: random
 commit / extend / raced-extend / sweep sequences must always leave
-CURRENT pointing at a COMPLETE version whose content equals the model —
-in particular, no interleaving of extensions may ever lose a delta
-(the CAS contract), on either backend."""
+the current version pointing at a COMPLETE version whose content equals
+the model — in particular, no interleaving of extensions may ever lose a
+delta (the CAS contract)."""
 
 import json
 import os
@@ -12,7 +12,7 @@ import tempfile
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from opencypher_datalayer_spark.operators.artifacts import open_artifact_store
+from opencypher_datalayer_spark.operators.artifacts import ArtifactStore
 
 KIND, KEY = "model", (("k",),)
 
@@ -59,11 +59,11 @@ def _compact(store, model: set[str], retries: int = 5) -> None:
 
 
 @settings(max_examples=25, deadline=None)
-@given(backend=st.sampled_from(["localfs", "txnlog"]), ops=ops_strategy)
-def test_lifecycle_model_never_loses_a_delta(backend, ops):
+@given(ops=ops_strategy)
+def test_lifecycle_model_never_loses_a_delta(ops):
     root = tempfile.mkdtemp(prefix="artifact_model_")
     try:
-        store = open_artifact_store(root, backend)
+        store = ArtifactStore(root)
         model: set[str] = set()
         counter = [0]
 
@@ -134,21 +134,16 @@ def test_lifecycle_model_never_loses_a_delta(backend, ops):
             cur = store.current_dir(KIND, KEY)
             if model:
                 assert cur is not None
-                assert _content(cur) == model, (backend, op, ops)
+                assert _content(cur) == model, (op, ops)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def _dir_footprint(store, backend: str) -> tuple[int, int]:
-    """(version-ish dirs, total entries) of the artifact's directory —
-    the growth the sweep schedule must keep bounded."""
-    adir = store._adir(KIND, KEY)
-    entries = os.listdir(adir)
-    if backend == "txnlog":
-        vdirs = [e for e in entries if e.startswith("d-")]
-    else:
-        vdirs = [e for e in entries if e.startswith("v") and e[1:].isdigit()]
-    return len(vdirs), len(entries)
+def _dir_footprint(store) -> tuple[int, int]:
+    """(version dirs, total entries) of the artifact's directory — the
+    growth the sweep schedule must keep bounded."""
+    entries = os.listdir(store._adir(KIND, KEY))
+    return len([e for e in entries if e.startswith("d-")]), len(entries)
 
 
 def test_artifact_aging_bounded_growth():
@@ -156,48 +151,43 @@ def test_artifact_aging_bounded_growth():
     directory must not grow without bound. 300 iterations of the
     steady-state schedule — extend every step, compact every 16th (the
     bm25 COMPACT_GENERATIONS cadence), sweep(keep_versions=2) every
-    8th, a CONCURRENT second sweeper racing the schedule — on both
-    backends. Pins: (a) content always equals the model (no delta ever
-    lost across ~340 version publications), (b) immediately after each
-    sweep the version-dir count is <= keep_versions and the total
-    directory entries stay under a fixed ceiling, (c) no dead tmp or
-    orphan data dirs survive the final sweep."""
+    8th, a CONCURRENT second sweeper racing the schedule. Pins: (a)
+    content always equals the model (no delta ever lost across ~340
+    version publications), (b) immediately after each sweep the
+    version-dir count is <= keep_versions and the total directory
+    entries stay under a fixed ceiling, (c) no orphan data dirs survive
+    the final sweep."""
     import threading
 
-    for backend in ("localfs", "txnlog"):
-        root = tempfile.mkdtemp(prefix=f"artifact_aging_{backend}_")
-        try:
-            store = open_artifact_store(root, backend)
-            sweeper = open_artifact_store(root, backend)  # second process-alike
-            store.commit(KIND, KEY, lambda d: _write_token(d, "t000"))
-            model = {"t000"}
-            ceiling = 0
-            for i in range(1, 301):
-                tok = f"t{i:03d}"
-                store.commit_extension(
-                    KIND, KEY, lambda d, tok=tok: _write_token(d, tok)
-                )
-                model.add(tok)
-                if i % 16 == 0:
-                    _compact(store, model)
-                if i % 8 == 0:
-                    # two sweepers race (a deployment's janitor overlapping
-                    # an operator-invoked cleanup); rmtree tolerates the
-                    # overlap and neither may touch the current version
-                    t = threading.Thread(target=sweeper.sweep, kwargs={"keep_versions": 2})
-                    t.start()
-                    store.sweep(keep_versions=2)
-                    t.join()
-                    nv, total = _dir_footprint(store, backend)
-                    assert nv <= 2, (backend, i, nv)
-                    # CURRENT/KEY/_log/lock + kept versions: fixed ceiling
-                    assert total <= 8, (backend, i, total)
-                    ceiling = max(ceiling, total)
-                cur = store.current_dir(KIND, KEY)
-                assert _content(cur) == model, (backend, i)
-            removed = store.sweep(keep_versions=1)
-            nv, total = _dir_footprint(store, backend)
-            assert nv == 1 and total <= 6, (backend, nv, total, removed)
-            assert _content(store.current_dir(KIND, KEY)) == model
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
+    root = tempfile.mkdtemp(prefix="artifact_aging_")
+    try:
+        store = ArtifactStore(root)
+        sweeper = ArtifactStore(root)  # second process-alike
+        store.commit(KIND, KEY, lambda d: _write_token(d, "t000"))
+        model = {"t000"}
+        for i in range(1, 301):
+            tok = f"t{i:03d}"
+            store.commit_extension(KIND, KEY, lambda d, tok=tok: _write_token(d, tok))
+            model.add(tok)
+            if i % 16 == 0:
+                _compact(store, model)
+            if i % 8 == 0:
+                # two sweepers race (a deployment's janitor overlapping
+                # an operator-invoked cleanup); rmtree tolerates the
+                # overlap and neither may touch the current version
+                t = threading.Thread(target=sweeper.sweep, kwargs={"keep_versions": 2})
+                t.start()
+                store.sweep(keep_versions=2)
+                t.join()
+                nv, total = _dir_footprint(store)
+                assert nv <= 2, (i, nv)
+                # KEY/_log + kept versions: fixed ceiling
+                assert total <= 8, (i, total)
+            cur = store.current_dir(KIND, KEY)
+            assert _content(cur) == model, i
+        removed = store.sweep(keep_versions=1)
+        nv, total = _dir_footprint(store)
+        assert nv == 1 and total <= 6, (nv, total, removed)
+        assert _content(store.current_dir(KIND, KEY)) == model
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

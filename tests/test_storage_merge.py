@@ -9,22 +9,25 @@ micro-batch touches a handful of files, not the table.
 """
 
 import glob
+import json
 import os
+import threading
 
 from opencypher_datalayer_spark.model import ENTITY_SCHEMA, normalize_entity
 import pytest
 
-from opencypher_datalayer_spark.storage import ParquetGraphStorage, open_storage
+import opencypher_datalayer_spark.storage as storage_mod
+from opencypher_datalayer_spark.storage import (
+    ParquetGraphStorage,
+    _log_path,
+    _log_put,
+    _log_slots,
+    _put_if_absent,
+    open_storage,
+)
 from opencypher_datalayer_spark.store import GraphStore
 
 NS = "urn:m"
-
-
-@pytest.fixture(params=["parquet", "txnlog"])
-def backend(request):
-    """Both storage backends run the same pruned-MERGE suite: the
-    single-host lock backend and the multi-host transaction-log one."""
-    return request.param
 
 
 def _batch(spark, entities):
@@ -36,7 +39,7 @@ def _batch(spark, entities):
     return spark.createDataFrame(rows, ENTITY_SCHEMA)
 
 
-def _seed(spark, root, n=40, buckets=4, backend="parquet"):
+def _seed(spark, root, n=40, buckets=4, place=lambda storage: storage):
     """A clustered baseline snapshot: n nodes + a chain of edges, range-
     partitioned into ``buckets`` files per table so ranges are narrow."""
     ents = [
@@ -47,7 +50,7 @@ def _seed(spark, root, n=40, buckets=4, backend="parquet"):
         }
         for i in range(n)
     ]
-    storage = open_storage(root, backend)
+    storage = place(open_storage(root))
     store = GraphStore.empty(spark).apply_batch(_batch(spark, ents), "P", "s")
     storage.commit(store, cluster_buckets=buckets)
     return storage
@@ -75,8 +78,8 @@ def _snapshot(spark, storage, v):
     return _rows(storage.load_version(spark, v))
 
 
-def test_small_batch_rewrites_strict_subset(spark, tmp_path, backend):
-    storage = _seed(spark, str(tmp_path / "s"), backend=backend)
+def test_small_batch_rewrites_strict_subset(spark, tmp_path, writers):
+    storage = _seed(spark, str(tmp_path / "s"), place=writers)
     v1_files = _files(storage, 1)
 
     batch = _batch(
@@ -103,11 +106,11 @@ def test_small_batch_rewrites_strict_subset(spark, tmp_path, backend):
     assert _snapshot(spark, storage, 2) == expected
 
 
-def test_tombstone_detach_prunes_by_dst(spark, tmp_path, backend):
+def test_tombstone_detach_prunes_by_dst(spark, tmp_path, writers):
     """A tombstone must remove edges pointing AT the gid even when their
     src lives in a file whose src range does not admit the batch id —
     that is what the manifest's dst stats are for."""
-    storage = _seed(spark, str(tmp_path / "s"), backend=backend)
+    storage = _seed(spark, str(tmp_path / "s"), place=writers)
     batch = _batch(spark, [{"id": f"{NS}/n0039", "deleted": True}])
     expected = _snapshot_of(spark, storage, batch)
 
@@ -119,10 +122,10 @@ def test_tombstone_detach_prunes_by_dst(spark, tmp_path, backend):
     assert all(s != gone and d != gone for s, _, d, _ in edges)
 
 
-def test_merge_chain_matches_full_path(spark, tmp_path, backend):
+def test_merge_chain_matches_full_path(spark, tmp_path, writers):
     """Several merges in a row (upsert, stub upgrade, tombstone, re-add)
     stay equivalent to the full apply_batch path."""
-    storage = _seed(spark, str(tmp_path / "s"), n=12, buckets=3, backend=backend)
+    storage = _seed(spark, str(tmp_path / "s"), n=12, buckets=3, place=writers)
     batches = [
         [{"id": f"{NS}/extra", "props": {f"{NS}/name": "x"},
           "refs": {f"{NS}/next": [f"{NS}/n0005"]}}],
@@ -142,11 +145,11 @@ def _snapshot_of(spark, storage, batch):
     return _rows(storage.load(spark).apply_batch(batch, "P", "s"))
 
 
-def test_compact_shrinks_files_preserves_data(spark, tmp_path, backend):
+def test_compact_shrinks_files_preserves_data(spark, tmp_path, writers):
     """Repeated merge commits accumulate small appended files; compact
     rewrites the snapshot range-clustered with fewer files and exactly
     the same rows."""
-    storage = _seed(spark, str(tmp_path / "st"), n=40, buckets=4, backend=backend)
+    storage = _seed(spark, str(tmp_path / "st"), n=40, buckets=4, place=writers)
     for k in range(3):  # 3 appends already out-fragment the 4-bucket rewrite
         batch = _batch(
             spark,
@@ -178,14 +181,13 @@ def test_compact_shrinks_files_preserves_data(spark, tmp_path, backend):
     assert hit is not None and len(hit) < total
 
 
-def test_concurrent_merge_commits_both_survive(spark, tmp_path, backend):
-    """Two writers committing simultaneously must serialize on the
-    O_EXCL commit lock: both batches land, versions advance linearly,
-    and neither snapshot is clobbered (the reference gets this from
-    Neo4j transactions, neo4j.go:238-284)."""
-    import threading
-
-    storage = _seed(spark, str(tmp_path / "c"), backend=backend)
+def test_concurrent_merge_commits_both_survive(spark, tmp_path, writers):
+    """Two writers committing simultaneously are serialized, by the
+    commit lock on one host and by the log slot across hosts: both
+    batches land, versions advance linearly, and neither snapshot is
+    clobbered (the reference gets this from Neo4j transactions,
+    neo4j.go:238-284)."""
+    storage = _seed(spark, str(tmp_path / "c"), place=writers)
     base = storage.current_version()
     errs = []
 
@@ -231,42 +233,56 @@ def test_stale_commit_lock_is_broken(spark, tmp_path):
 
 
 def test_txnlog_publish_race_cas(spark, tmp_path):
-    """The txnlog put-if-absent: exactly one writer wins a version slot;
-    the loser's publish returns False and its retry lands on the next
-    slot. (Direct protocol-level check complementing the threaded
-    concurrent test above.)"""
-    from opencypher_datalayer_spark.storage import TxnLogGraphStorage
-
-    st = TxnLogGraphStorage(str(tmp_path / "t"))
-    assert st._publish(1, "d-a") is True
-    assert st._publish(1, "d-b") is False  # slot taken
+    """The log's put-if-absent: exactly one writer wins a version slot;
+    the loser's put returns False and its retry lands on the next slot.
+    (Direct protocol-level check complementing the threaded concurrent
+    test above.)"""
+    st = ParquetGraphStorage(str(tmp_path / "t"))
+    assert _log_put(st._log, 1, "d-a") is True
+    assert _log_put(st._log, 1, "d-b") is False  # slot taken
     assert st.current_version() == 1
-    assert st._publish(2, "d-b") is True
+    assert _log_put(st._log, 2, "d-b") is True
     assert st.current_version() == 2
+
+
+def test_put_if_absent_raises_when_the_link_does_not_land(tmp_path, monkeypatch):
+    """A link(2) that fails without landing while the target is absent
+    (EPERM on a filesystem without hard links) is no lost race: the put
+    raises instead of returning False, which would send both publish
+    loops round forever."""
+
+    def no_link(src, dst, **kw):
+        raise PermissionError(1, "Operation not permitted")
+
+    target = str(tmp_path / "00000001.json")
+    monkeypatch.setattr(os, "link", no_link)
+    with pytest.raises(PermissionError):
+        _put_if_absent(target, "{}")
+    monkeypatch.undo()
+    assert os.listdir(tmp_path) == []  # no slot, no temp file left
 
 
 def test_txnlog_restart_and_vacuum(spark, tmp_path):
     """A second storage handle on the same root sees the committed
     snapshot (restart path); vacuum drops old data dirs but keeps the
     log monotonic."""
-    import os as _os
-
-    from opencypher_datalayer_spark.storage import TxnLogGraphStorage
-
     root = str(tmp_path / "t")
-    storage = _seed(spark, root, n=12, buckets=3, backend="txnlog")
+    storage = _seed(spark, root, n=12, buckets=3)
     b = _batch(spark, [{"id": f"{NS}/xx", "props": {f"{NS}/name": "x"}, "refs": {}}])
     storage.merge_commit(spark, b, "P", "s")
-    fresh = TxnLogGraphStorage(root)
+    fresh = ParquetGraphStorage(root)
     assert fresh.current_version() == 2
     nodes, _ = _snapshot(spark, fresh, 2)
     assert any(g == f"{NS}/xx" for g, *_ in nodes)
+    v1_dir = fresh._version_dir(1)
     fresh.vacuum(keep=1)
     assert fresh.current_version() == 2
+    assert not os.path.exists(v1_dir)
     with pytest.raises(ValueError):
         fresh.load_version(spark, 1)
-    # CURRENT pointer never exists in this backend
-    assert not _os.path.exists(_os.path.join(root, "CURRENT"))
+    # no mutable pointer: the log is the only record of versions
+    assert not os.path.exists(os.path.join(root, "CURRENT"))
+    assert _log_slots(fresh._log) == [2]
 
 
 def test_txnlog_lost_link_reply_still_wins(spark, tmp_path, monkeypatch):
@@ -275,73 +291,64 @@ def test_txnlog_lost_link_reply_still_wins(spark, tmp_path, monkeypatch):
     detect the win via st_nlink == 2 instead of believing the
     exception — otherwise the writer retries the next slot and the same
     snapshot publishes twice."""
-    import os as _os
-
-    from opencypher_datalayer_spark.storage import TxnLogGraphStorage
-
-    st = TxnLogGraphStorage(str(tmp_path / "t"))
-    real_link = _os.link
+    st = ParquetGraphStorage(str(tmp_path / "t"))
+    real_link = os.link
 
     def lossy_link(src, dst, **kw):
         real_link(src, dst, **kw)  # the operation lands...
         raise OSError("simulated lost RPC reply")  # ...the reply doesn't
 
-    monkeypatch.setattr(_os, "link", lossy_link)
-    assert st._publish(1, "d-a") is True  # win detected via nlink probe
+    monkeypatch.setattr(os, "link", lossy_link)
+    assert _log_put(st._log, 1, "d-a") is True  # win detected via nlink probe
     monkeypatch.undo()
     assert st.current_version() == 1
-    with open(st._log_path(1)) as f:
-        import json as _json
-
-        assert _json.load(f)["dir"] == "d-a"
+    with open(_log_path(st._log, 1)) as f:
+        assert json.load(f)["dir"] == "d-a"
 
 
 def test_txnlog_gc_racing_stalled_writer_never_dangles(spark, tmp_path, monkeypatch):
-    """ADVICE r6 #3: a writer stalled past min_age_s between its data
-    write and _publish can have its dir collected by a concurrent
-    gc_orphans — yet its publish still wins the slot. The commit path
-    must self-heal (rebuild + rewrite its own entry) so CURRENT never
-    points at a nonexistent directory."""
-    import os as _os
-    import shutil as _shutil
-
-    from opencypher_datalayer_spark.storage import TxnLogGraphStorage
+    """A writer stalled past min_age_s between its data write and its
+    log put can have its dir collected by a concurrent gc_orphans — yet
+    its put still wins the slot. The commit path must self-heal (rebuild
+    + rewrite its own entry) so a version never points at a nonexistent
+    directory."""
+    import shutil
 
     root = str(tmp_path / "t")
-    storage = _seed(spark, root, n=10, buckets=2, backend="txnlog")
+    storage = _seed(spark, root, n=10, buckets=2)
     assert storage.current_version() == 1
 
     # simulate the worst-case interleaving: GC fires between the utime
-    # guard and the log-entry link (min_age 0 == arbitrarily long stall)
-    real_publish = storage._publish
+    # guard and the log put (min_age 0 == arbitrarily long stall)
+    real_put = storage_mod._log_put
 
-    def gc_then_publish(v, dirname):
-        TxnLogGraphStorage(root).gc_orphans(min_age_s=0.0)
-        assert not _os.path.isdir(_os.path.join(root, dirname))
-        return real_publish(v, dirname)
+    def gc_then_put(log_dir, v, dirname):
+        ParquetGraphStorage(root).gc_orphans(min_age_s=0.0)
+        assert not os.path.isdir(os.path.join(root, dirname))
+        return real_put(log_dir, v, dirname)
 
-    monkeypatch.setattr(storage, "_publish", gc_then_publish)
+    monkeypatch.setattr(storage_mod, "_log_put", gc_then_put)
     b = _batch(spark, [{"id": f"{NS}/healed", "props": {}, "refs": {}}])
     assert storage.merge_commit(spark, b, "P", "s") == 2
     monkeypatch.undo()
 
     # the published version is fully readable from a fresh handle
-    fresh = TxnLogGraphStorage(root)
+    fresh = ParquetGraphStorage(root)
     assert fresh.current_version() == 2
-    vdir = fresh._version_dir(2)
-    assert _os.path.isdir(vdir)
+    assert os.path.isdir(fresh._version_dir(2))
     nodes = {r.gid for r in fresh.load(spark).nodes.collect()}
     assert f"{NS}/healed" in nodes and f"{NS}/n0000" in nodes
 
     # same self-heal on the snapshot commit path
-    monkeypatch.setattr(fresh, "_publish", lambda v, d, _r=fresh._publish: (
-        _shutil.rmtree(_os.path.join(root, d), ignore_errors=True),
-        _r(v, d),
-    )[1])
-    store = fresh.load(spark)
-    assert fresh.commit(store) == 3
-    fresh2 = TxnLogGraphStorage(root)
-    assert _os.path.isdir(fresh2._version_dir(3))
+    def rm_then_put(log_dir, v, dirname):
+        shutil.rmtree(os.path.join(root, dirname), ignore_errors=True)
+        return real_put(log_dir, v, dirname)
+
+    monkeypatch.setattr(storage_mod, "_log_put", rm_then_put)
+    assert fresh.commit(fresh.load(spark)) == 3
+    monkeypatch.undo()
+    fresh2 = ParquetGraphStorage(root)
+    assert os.path.isdir(fresh2._version_dir(3))
     assert {r.gid for r in fresh2.load(spark).nodes.collect()} == nodes
 
     # the pre-publish utime guard: a missing dir reports False
@@ -349,90 +356,130 @@ def test_txnlog_gc_racing_stalled_writer_never_dangles(spark, tmp_path, monkeypa
 
 
 def test_txnlog_crash_between_write_and_publish(spark, tmp_path, monkeypatch):
-    """A writer killed AFTER the data write but BEFORE _publish leaves
-    an orphaned d-<uuid> dir and no log entry: readers (same handle and
-    a fresh one) still see the previous version's exact snapshot, a
-    later writer commits normally, and gc_orphans reclaims the orphan
-    without touching published data."""
-    import os as _os
-
-    from opencypher_datalayer_spark.storage import TxnLogGraphStorage
-
+    """A writer killed AFTER the data write but BEFORE its log put leaves
+    an orphaned d-<uuid> dir, no log entry and no lock: readers (same
+    handle and a fresh one) still see the previous version's exact
+    snapshot, the next merge commits normally with no gid twice (the
+    carried links cannot collide with the leftover files), and
+    gc_orphans reclaims the orphan without touching published data."""
     root = str(tmp_path / "t")
-    storage = _seed(spark, root, n=12, buckets=3, backend="txnlog")
+    storage = _seed(spark, root, n=12, buckets=3)
     before_nodes, before_edges = _snapshot(spark, storage, 1)
 
-    # crash the commit right before its publish step
-    monkeypatch.setattr(
-        storage, "_publish", lambda v, d: (_ for _ in ()).throw(KeyboardInterrupt)
-    )
+    # crash the commit right before its log put
+    def crash(*a):
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(storage_mod, "_log_put", crash)
     b = _batch(spark, [{"id": f"{NS}/crash", "props": {}, "refs": {}}])
     with pytest.raises(KeyboardInterrupt):
         storage.merge_commit(spark, b, "P", "s")
     monkeypatch.undo()
 
-    orphans = [d for d in _os.listdir(root) if d.startswith("d-")]
+    orphans = [d for d in os.listdir(root) if d.startswith("d-")]
     assert len(orphans) == 2  # v1's dir + the unpublished one
+    assert not os.path.exists(os.path.join(root, "COMMIT.lock"))
 
     # reader consistency: both the surviving handle and a fresh one
     # still serve version 1, bit-identical to before the crash
     assert storage.current_version() == 1
-    fresh = TxnLogGraphStorage(root)
+    fresh = ParquetGraphStorage(root)
     assert fresh.current_version() == 1
     assert _snapshot(spark, fresh, 1) == (before_nodes, before_edges)
 
     # the next writer proceeds as if nothing happened
-    b2 = _batch(spark, [{"id": f"{NS}/after", "props": {}, "refs": {}}])
+    b2 = _batch(spark, [{"id": f"{NS}/n0003", "props": {f"{NS}/name": "after"}, "refs": {}}])
     assert fresh.merge_commit(spark, b2, "P", "s") == 2
     nodes2, _ = _snapshot(spark, fresh, 2)
-    assert any(g == f"{NS}/after" for g, *_ in nodes2)
-    assert not any(g == f"{NS}/crash" for g, *_ in nodes2)
+    gids = [r.gid for r in fresh.load(spark).nodes.collect()]
+    assert f"{NS}/crash" not in gids
+    assert len(gids) == len(set(gids)) == 12
 
     # GC: the age guard protects a possibly-live writer's dir...
     assert fresh.gc_orphans(min_age_s=3600) == []
     # ...and with the guard elapsed the orphan (only it) is removed
     removed = fresh.gc_orphans(min_age_s=0)
     assert len(removed) == 1
-    assert removed[0] not in (_os.path.basename(fresh._version_dir(v)) for v in (1, 2))
+    assert removed[0] not in (os.path.basename(fresh._version_dir(v)) for v in (1, 2))
     assert fresh.current_version() == 2
     assert _snapshot(spark, fresh, 2)[0] == nodes2
 
 
-def test_parquet_crash_before_current_swap_does_not_wedge(spark, tmp_path, monkeypatch):
-    """A writer that dies after writing v{N+1}/ but before the CURRENT
-    swap leaves that directory behind, unpublished. The next merge must
-    rebuild v{N+1} from scratch: it succeeds, the crashed batch is not in
-    it, and no gid appears twice (carry-forward links must not collide
-    with the leftover files)."""
-    import os as _os
-
-    root = str(tmp_path / "p")
+def test_a_build_that_raises_leaves_no_data_dir(spark, tmp_path, monkeypatch):
+    """A merge whose build fails after writing its tables (here: the
+    manifest write raises) publishes nothing and removes its half-built
+    data dir, so a served root does not collect one per failed write."""
+    root = str(tmp_path / "f")
     storage = _seed(spark, root, n=12, buckets=3)
-    real_replace = _os.replace
+    before = sorted(os.listdir(root))
 
-    def crash_at_swap(src, dst, *a, **kw):
-        if _os.path.basename(dst) == "CURRENT":
-            raise KeyboardInterrupt
-        return real_replace(src, dst, *a, **kw)
+    def fail(*a, **kw):
+        raise RuntimeError("simulated write failure")
 
-    monkeypatch.setattr(_os, "replace", crash_at_swap)
-    b = _batch(spark, [{"id": f"{NS}/crash", "props": {}, "refs": {}}])
-    with pytest.raises(KeyboardInterrupt):
+    monkeypatch.setattr(storage, "_write_manifest", fail)
+    b = _batch(spark, [{"id": f"{NS}/fail", "props": {}, "refs": {}}])
+    with pytest.raises(RuntimeError, match="simulated"):
         storage.merge_commit(spark, b, "P", "s")
-    monkeypatch.undo()
     assert storage.current_version() == 1
-    assert _os.path.isdir(storage._version_dir(2))  # the unpublished leftover
+    assert sorted(os.listdir(root)) == before
 
-    b2 = _batch(spark, [{"id": f"{NS}/n0003", "props": {f"{NS}/name": "after"}, "refs": {}}])
-    assert storage.merge_commit(spark, b2, "P", "s") == 2
-    gids = [r.gid for r in storage.load(spark).nodes.collect()]
-    assert f"{NS}/crash" not in gids
-    assert len(gids) == len(set(gids)) == 12
+
+def test_two_handles_build_each_batch_once(spark, tmp_path, monkeypatch):
+    """Two handles on one root merge in two threads. The second waits on
+    the commit lock while the first builds, then builds on the first
+    one's version, so each batch's ``_write_merge`` runs exactly once,
+    and both versions are published through the log. Without the lock
+    the second writer's build loses its slot and runs again."""
+    root = str(tmp_path / "b")
+    _seed(spark, root, n=12, buckets=3)
+    lock = os.path.join(root, "COMMIT.lock")
+    builds, waited = [], []
+    building, queued = threading.Event(), threading.Event()
+    handles = [open_storage(root), open_storage(root)]
+    for h in handles:
+
+        def write_merge(spark_, vdir, base, batch, label, source, *a, _real=h._write_merge):
+            builds.append(source)
+            building.set()
+            assert queued.wait(timeout=120)  # the other writer is at the lock
+            return _real(spark_, vdir, base, batch, label, source, *a)
+
+        def acquire(*a, _real=h._acquire_commit_lock, **kw):
+            if os.path.exists(lock):
+                waited.append(1)
+                queued.set()
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(h, "_write_merge", write_merge)
+        monkeypatch.setattr(h, "_acquire_commit_lock", acquire)
+
+    errs = []
+
+    def merge(h, source):
+        try:
+            b = _batch(spark, [{"id": f"{NS}/{source}", "props": {}, "refs": {}}])
+            h.merge_commit(spark, b, "P", source)
+        except Exception as exc:  # pragma: no cover - surfaced below
+            errs.append(exc)
+
+    first = threading.Thread(target=merge, args=(handles[0], "sa"))
+    first.start()
+    assert building.wait(timeout=120)
+    second = threading.Thread(target=merge, args=(handles[1], "sb"))
+    second.start()
+    first.join(timeout=300)
+    second.join(timeout=300)
+    assert not errs, errs
+    assert sorted(builds) == ["sa", "sb"]
+    assert waited == [1]
+    assert _log_slots(os.path.join(root, "_log")) == [1, 2, 3]
+    gids = {r.gid for r in open_storage(root).load(spark).nodes.collect()}
+    assert {f"{NS}/sa", f"{NS}/sb"} <= gids
 
 
 @pytest.mark.parametrize("rewrite", ["compact", "wipe", "cypher_write"])
 def test_compact_keeps_batch_merged_during_compaction(
-    spark, tmp_path, backend, monkeypatch, rewrite
+    spark, tmp_path, writers, monkeypatch, rewrite
 ):
     """A merge that lands between a rewrite's read of the base version
     and its publish must survive the rewrite. Compaction, the full-sync
@@ -457,8 +504,8 @@ def test_compact_keeps_batch_merged_during_compaction(
         ),
     }
     root = str(tmp_path / "cm")
-    storage = _seed(spark, root, n=12, buckets=3, backend=backend)
-    other = open_storage(root, backend)  # a second writer on the same root
+    storage = _seed(spark, root, n=12, buckets=3, place=writers)
+    other = writers(open_storage(root))  # a second writer on the same root
     lock = _os.path.join(root, "COMMIT.lock")
     settled = threading.Event()  # the merge landed, or waits behind compaction
     errs = []
@@ -534,11 +581,11 @@ def test_merge_commit_job_count_is_pinned(spark, tmp_path):
     assert _snapshot(spark, storage, 2) == expected
 
 
-def test_first_batch_into_a_fresh_root_takes_the_key_set_merge(spark, tmp_path, backend, monkeypatch):
+def test_first_batch_into_a_fresh_root_takes_the_key_set_merge(spark, tmp_path, writers, monkeypatch):
     """Version 0 has an (empty) manifest, so the first batch into a fresh
     root is a served merge like any other: ``apply_collected``, never
     the over-budget ``apply_batch``."""
-    storage = open_storage(str(tmp_path / "s"), backend)
+    storage = writers(open_storage(str(tmp_path / "s")))
     ran = []
 
     def spy(name):
@@ -561,10 +608,10 @@ def test_first_batch_into_a_fresh_root_takes_the_key_set_merge(spark, tmp_path, 
     )
 
 
-def test_every_version_has_a_manifest(spark, tmp_path, backend):
+def test_every_version_has_a_manifest(spark, tmp_path, writers):
     """Version 0 lists no files; an unknown version raises like
     ``load_version`` does."""
-    storage = open_storage(str(tmp_path / "s"), backend)
+    storage = writers(open_storage(str(tmp_path / "s")))
     assert storage._manifest(0) == {"nodes": [], "edges": []}
     assert storage.pruned_files("nodes", [f"{NS}/a"]) == ([], 0)
     for v in (1, 7):

@@ -303,11 +303,11 @@ def test_stream_vector_ingest_d256_at_family_threshold(spark, tmp_path):
     # one — reread from version 1 via the store's earliest version
     import os as _os
 
+    from opencypher_datalayer_spark.storage import _LOG, _log_slots
+
     adir = _os.path.dirname(sink.index_dir())
-    v1 = sorted(
-        p for p in _os.listdir(adir) if p.startswith("v") and p[1:].isdigit()
-    )[0]
-    ids, cq = read_codebook(spark, _os.path.join(adir, v1))
+    v1 = _log_slots(_os.path.join(adir, _LOG))[0]
+    ids, cq = read_codebook(spark, store._version_dir(adir, v1))
     ref = _ref_run(batches, ids, cq, t=DUP_COS)
     want = set().union(*ref.values())
     assert got == want and got

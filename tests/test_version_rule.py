@@ -15,8 +15,6 @@ import threading
 import urllib.error
 import urllib.request
 
-import pytest
-
 from opencypher_datalayer_spark.ingest import BatchInfo, DataLayer
 from opencypher_datalayer_spark.service_http import UdaService
 from opencypher_datalayer_spark.storage import open_storage
@@ -33,9 +31,10 @@ UPSERT_CITY = (
 )
 
 
-@pytest.fixture(params=["parquet", "txnlog"])
-def backend(request):
-    return request.param
+def _layer(spark, root, place):
+    layer = DataLayer(spark, CONFIG, storage_root=root)
+    place(layer._storage)
+    return layer
 
 
 def _ent(gid, refs=None):
@@ -60,15 +59,13 @@ def _req(port, path, body=None, headers=None):
         return e.code, json.loads(e.read())
 
 
-def test_two_layers_read_and_keep_each_others_commits(spark, tmp_path, backend):
+def test_two_layers_read_and_keep_each_others_commits(spark, tmp_path, writers):
     """Layer A's Cypher reads, entity page refs and change feed include
     what layer B committed, and the change token is the version its rows
     come from. A's full sync of another dataset and A's Cypher write are
     derived from the version they publish on, so B's entities survive."""
     root = str(tmp_path / "s")
-    a, b = (
-        DataLayer(spark, CONFIG, storage_root=root, storage_backend=backend) for _ in range(2)
-    )
+    a, b = (_layer(spark, root, writers) for _ in range(2))
     _write(a, [_ent("urn:a")])  # A has now read version 1
     _write(b, [_ent("urn:b", {"urn:r": "urn:x"})])
 
@@ -91,16 +88,16 @@ def test_two_layers_read_and_keep_each_others_commits(spark, tmp_path, backend):
     _write(a, [_ent("urn:o")], dataset="orgs", full_sync=True)
     _write(b, [_ent("urn:b2")])
     a.query(UPSERT_CITY, {"items": [{"gid": "urn:c", "source": "cities"}]})
-    stored = open_storage(root, backend).load(spark)
+    stored = open_storage(root).load(spark)
     assert sorted(r.gid for r in stored.nodes.collect()) == [
         "urn:a", "urn:b", "urn:b2", "urn:c", "urn:o", "urn:x",
     ]
 
 
-def test_a_writers_read_after_its_ack_sees_its_write(spark, tmp_path, backend):
+def test_a_writers_read_after_its_ack_sees_its_write(spark, tmp_path, writers):
     """Two threads write through one layer; each one's read right after
     its write returns sees that write."""
-    layer = DataLayer(spark, CONFIG, storage_root=str(tmp_path / "s"), storage_backend=backend)
+    layer = _layer(spark, str(tmp_path / "s"), writers)
     seen, errs = {}, []
 
     def writer(gid):
@@ -160,11 +157,11 @@ def test_concurrent_posts_to_a_default_root_each_land(spark):
     assert sorted(r.gid for r in layer.store.nodes.collect()) == gids
 
 
-def test_a_statement_that_fails_to_plan_publishes_nothing(spark, tmp_path, backend, monkeypatch):
+def test_a_statement_that_fails_to_plan_publishes_nothing(spark, tmp_path, writers, monkeypatch):
     """A Cypher write that fails to plan inside the publish step is a 400
     and leaves no version and no snapshot directory behind."""
     root = str(tmp_path / "s")
-    layer = DataLayer(spark, CONFIG, storage_root=root, storage_backend=backend)
+    layer = _layer(spark, root, writers)
     _write(layer, [_ent("urn:a")])
     before = (layer._storage.current_version(), sorted(os.listdir(root)))
     publish = layer._storage._publish_build
@@ -185,16 +182,14 @@ def test_a_statement_that_fails_to_plan_publishes_nothing(spark, tmp_path, backe
     assert (layer._storage.current_version(), sorted(os.listdir(root))) == before
 
 
-def test_full_sync_start_post_publishes_wipe_with_its_batch(spark, tmp_path, backend, monkeypatch):
+def test_full_sync_start_post_publishes_wipe_with_its_batch(spark, tmp_path, writers, monkeypatch):
     """A second layer on the same root counts the dataset after every
     version a start-batch POST publishes: the wipe lands in the same
     version as the batch, so the count is never 0. A start POST of at
     most ``batch_size`` entities publishes exactly one version; an
     empty start batch publishes exactly one, the wipe."""
     root = str(tmp_path / "s")
-    layer, other = (
-        DataLayer(spark, CONFIG, storage_root=root, storage_backend=backend) for _ in range(2)
-    )
+    layer, other = (_layer(spark, root, writers) for _ in range(2))
     _write(layer, [_ent("urn:a"), _ent("urn:b")])
     storage = layer._storage
     publish, counts = storage._publish_build, []

@@ -20,8 +20,8 @@ replace with Delta/Iceberg):
   DIFFERENT artifact — stale reads are structurally impossible, no
   invalidation bookkeeping.
 - Each artifact directory holds immutable data directories
-  (``d-<uuid>_p<pid>``), each fully written BEFORE any coordination, and
-  an append-only log: version N is published by putting
+  (``d-<uuid>_<host>_p<pid>``), each fully written BEFORE any
+  coordination, and an append-only log: version N is published by putting
   ``_log/{N:08d}.json`` (recording the data directory) with
   ``storage._log_put`` — put-if-absent by the NFS-safe hard-link
   protocol, a conditional put (If-None-Match) on object storage. The
@@ -34,9 +34,10 @@ replace with Delta/Iceberg):
   drop one another's rows. Full rebuilds retry at successive slots
   (either deterministic rebuild is correct).
 - ``sweep`` reclaims non-current versions and the data directories no
-  log entry names whose owner pid is gone (a crashed or abandoned
-  build); ``drop`` removes artifacts outright (what the bench uses to
-  time cold builds).
+  log entry names that are a crashed or abandoned build: one written
+  on this host whose owner pid is gone, or one from another host (a pid
+  says nothing there) older than ``storage.ORPHAN_MIN_AGE_S``; ``drop``
+  removes artifacts outright (what the bench uses to time cold builds).
 
 The reference layer has no analog (it delegates persistence to Neo4j,
 ``layer.go:257-265``); this is infrastructure for the engine's
@@ -48,13 +49,17 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shutil
+import socket
 import tempfile
 import uuid
 from typing import Callable
 
 from opencypher_datalayer_spark.storage import (
     _LOG,
+    ORPHAN_MIN_AGE_S,
+    _aged,
     _link_or_copy,
     _log_entry_dir,
     _log_path,
@@ -65,6 +70,9 @@ from opencypher_datalayer_spark.storage import (
 
 _KEY_FILE = "KEY.json"
 _ANY = object()  # sentinel: publish unconditionally (full rebuilds)
+# this host's tag in build dir names: hostname characters other than
+# letters, digits, '.' and '-' are replaced, so '_' stays the separator
+_HOST = re.sub(r"[^A-Za-z0-9.-]", "-", socket.gethostname()) or "-"
 
 
 class ExtensionConflict(RuntimeError):
@@ -174,9 +182,9 @@ class ArtifactStore:
         adir = self._adir(kind, key)
         os.makedirs(adir, exist_ok=True)
         self._write_key(adir, kind, key)
-        # the pid tag lets sweep tell a crashed writer's unpublished dir
-        # from a live one's in-flight build
-        dirname = f"d-{uuid.uuid4().hex}_p{os.getpid()}"
+        # the host and pid tags let sweep tell a crashed writer's
+        # unpublished dir from a live one's in-flight build
+        dirname = f"d-{uuid.uuid4().hex}_{_HOST}_p{os.getpid()}"
         os.makedirs(os.path.join(adir, dirname))
         try:
             builder(os.path.join(adir, dirname))  # expensive part, uncoordinated
@@ -252,9 +260,12 @@ class ArtifactStore:
     def sweep(self, keep_versions: int = 1) -> list[str]:
         """Reclaim (a) versions older than the newest ``keep_versions``
         (the current version is always kept), with their log entries,
-        and (b) data dirs no log entry names whose owner pid is dead —
-        crashed or abandoned builds. A live pid's dir (an in-flight
-        build) is never touched. Returns the removed paths.
+        and (b) data dirs no log entry names that are crashed or
+        abandoned builds: written on this host by a dead pid, or written
+        on another host and untouched for ``ORPHAN_MIN_AGE_S`` (the age
+        rule of ``ParquetGraphStorage.gc_orphans``). A live local pid's
+        dir, or a recent one from another host on a shared root (an
+        in-flight build), is never touched. Returns the removed paths.
 
         NOTE (reader lease): a lazy DataFrame holds version PATHS, not
         snapshots — sweeping with ``keep_versions=1`` right after a
@@ -286,13 +297,10 @@ class ArtifactStore:
                 except OSError:
                     pass
             for entry in os.listdir(adir):
-                if (
-                    entry.startswith("d-")
-                    and entry not in referenced
-                    and not _pid_alive(_owner_pid(entry))
-                ):
-                    shutil.rmtree(os.path.join(adir, entry), ignore_errors=True)
-                    removed.append(os.path.join(adir, entry))
+                path = os.path.join(adir, entry)
+                if entry.startswith("d-") and entry not in referenced and _abandoned(path):
+                    shutil.rmtree(path, ignore_errors=True)
+                    removed.append(path)
         return removed
 
 
@@ -310,11 +318,15 @@ def _link_tree(src: str, dst: str) -> None:
             _link_or_copy(os.path.join(dirpath, f), os.path.join(out, f))
 
 
-def _owner_pid(name: str) -> int:
-    try:
-        return int(name.rsplit("_p", 1)[1])
-    except (IndexError, ValueError):
-        return -1
+def _abandoned(path: str) -> bool:
+    """Whether the unpublished build dir at ``path`` is no live writer's:
+    written on this host by a pid that is gone, or written elsewhere
+    (or under an untagged name) and older than ``ORPHAN_MIN_AGE_S`` —
+    a pid names a process only on the host that wrote it."""
+    host, _, pid = os.path.basename(path)[2:].partition("_")[2].rpartition("_p")
+    if host == _HOST and pid.isdigit():
+        return not _pid_alive(int(pid))
+    return _aged(path, ORPHAN_MIN_AGE_S)
 
 
 def _pid_alive(pid: int) -> bool:

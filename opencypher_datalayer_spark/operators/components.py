@@ -27,9 +27,13 @@ extension surface (repo north star), not reference parity.
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 # Driver-path memory model (measured, scripts/bench_cc_rss.py; table in
 # SCALE.md §cc-handover): the Arrow-collected numpy path's peak driver
@@ -50,8 +54,35 @@ DRIVER_CC_MEM_BUDGET = int(
 
 def driver_edge_budget() -> int:
     """Max deduped (symmetrized) edges admitted to the driver path:
-    the memory budget divided by the measured per-edge footprint."""
-    return max(1, DRIVER_CC_MEM_BUDGET // DRIVER_CC_EDGE_BYTES)
+    the memory budget divided by the measured per-edge footprint. A
+    budget of 0 admits none."""
+    return DRIVER_CC_MEM_BUDGET // DRIVER_CC_EDGE_BYTES
+
+
+def pull_or_checkpoint(df: DataFrame, cap: int) -> tuple[pd.DataFrame | None, DataFrame]:
+    """The size gate of the graph operators: ``(rows, df)`` when ``df``
+    has at most ``cap`` rows, ``rows`` being all of it as pandas, else
+    ``(None, checkpoint)`` with ``df`` materialized by a local
+    checkpoint for a distributed loop. ``cap`` 0 skips the pull.
+
+    The budget check and the collect are FUSED into one limited Arrow
+    pull: at most ``cap`` rows back means the limit never truncated, so
+    the driver path pays one pass over ``df`` instead of three
+    (checkpoint + count + collect). The pull reads a LAZY local
+    checkpoint of ``df``: marking it runs ``df``'s upstream shuffle (a
+    job the pull runs anyway), the pull's job stores every partition it
+    computes, and Spark computes the rest once that job ends. So over
+    budget the returned checkpoint is ``df`` computed exactly once, and
+    under budget the pull runs the same jobs a plain limited collect
+    would; its price there is the mark's planning and block writes,
+    ~30-60 ms per call on a 4-core host at 15k edges."""
+    if cap <= 0:
+        return None, df.localCheckpoint()
+    checkpoint = df.localCheckpoint(eager=False)
+    rows = checkpoint.limit(cap + 1).toPandas()
+    if len(rows) <= cap:
+        return rows, df
+    return None, checkpoint
 
 
 def connected_components(
@@ -70,11 +101,15 @@ def connected_components(
     Adaptive execution: when the deduped edge list fits a DRIVER MEMORY
     BUDGET (``edges x DRIVER_CC_EDGE_BYTES <= DRIVER_CC_MEM_BUDGET``,
     VERDICT r6 #2 — a measured bytes-per-edge model, not a fixed edge
-    count), the graph is pulled to the driver over Arrow and solved
-    with vectorized numpy min-label propagation — near-dup graphs are
-    usually tiny relative to the corpus that produced them, and the
-    distributed loop's floor is ~10 s of fixed job overhead (3-4
-    rounds x 4 jobs) regardless of size. ``driver_threshold``
+    count), the graph is solved on the driver with vectorized numpy
+    min-label propagation — near-dup graphs are usually tiny relative
+    to the corpus that produced them, and the distributed loop's floor
+    is ~10 s of fixed job overhead (3-4 rounds x 4 jobs) regardless of
+    size. The check and the collect are one limited Arrow pull,
+    :func:`pull_or_checkpoint`, the gate ``pagerank_fixedpoint`` shares
+    with its own per-edge constant. Over budget that pull's computation
+    of the edge list is kept as the distributed loop's checkpoint, so
+    the symmetrize + dedup subtree runs once. ``driver_threshold``
     overrides the derived edge cap (0 forces the distributed loop —
     the over-budget path for graphs that genuinely cannot collect).
 
@@ -93,20 +128,9 @@ def connected_components(
     )
 
     cap = driver_edge_budget() if driver_threshold is None else driver_threshold
-    if cap:
-        # budget check and collect FUSED into one limited Arrow pull:
-        # <= cap rows back means the pull IS the complete edge set (the
-        # limit never truncated), so the driver path pays one pass over
-        # the edge computation instead of three (checkpoint + count +
-        # collect — two fixed jobs of pure overhead per CC call on the
-        # near-dup hot paths). CollectLimit computes any upstream
-        # shuffle once and fetches partitions incrementally, so the
-        # over-budget probe costs one round of fetches, not a recompute.
-        pdf = und.limit(cap + 1).toPandas()
-        if len(pdf) <= cap:
-            return _driver_union_find_pdf(und, pdf)
-    # over budget: materialize once, then the distributed loop
-    und = und.localCheckpoint()
+    pdf, und = pull_or_checkpoint(und, cap)
+    if pdf is not None:
+        return _driver_union_find(und, pdf)
     labels = (
         und.select(F.col("a").alias("id"))
         .dropDuplicates()
@@ -145,10 +169,11 @@ def connected_components(
     return labels
 
 
-def _driver_union_find(und: DataFrame) -> DataFrame:
-    """Driver-local components over the collected edge list; same
-    output contract (min reachable id per node) as the distributed
-    loop. Columnar end-to-end: the edges arrive as ONE Arrow transfer
+def _driver_union_find(und: DataFrame, pdf: pd.DataFrame) -> DataFrame:
+    """Driver-local components over the collected edge list ``pdf``
+    (``und`` supplies the session and output schema only); same output
+    contract (min reachable id per node) as the distributed loop.
+    Columnar end-to-end: the edges arrive as ONE Arrow transfer
     (``toPandas``, no per-Row Python objects), ids are mapped to dense
     ranks with ``np.unique`` (sorted, so rank order == id order and
     the min-rank root IS the min-id component label), and labels
@@ -157,12 +182,6 @@ def _driver_union_find(und: DataFrame) -> DataFrame:
     each round O(m) in C. Replaces the r6 per-Row dict union-find
     (~15 us/edge in Python) with ~40 ns/edge, which is what lets the
     handover be sized by memory instead of patience (VERDICT r6 #2)."""
-    return _driver_union_find_pdf(und, und.toPandas())
-
-
-def _driver_union_find_pdf(und: DataFrame, pdf) -> DataFrame:
-    """The numpy solve over an already-collected edge pandas frame
-    (``und`` supplies the session and output schema only)."""
     import numpy as np
 
     spark = und.sparkSession

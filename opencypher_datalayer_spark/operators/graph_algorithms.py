@@ -4,16 +4,33 @@
 joins + iterative joins, SURVEY §1.4).
 
 Determinism discipline: PageRank runs in *integer fixed-point*
-(ranks scaled by 1e12, contributions use integer floor division), so
+(ranks scaled by 1e9, contributions use integer floor division), so
 every engine computing the same iteration count gets bit-identical
 ranks — float accumulation order never enters. That is what makes a
 full value-level DuckDB oracle possible for an iterative algorithm.
+
+Size-gated plans: PageRank, like ``components.connected_components``,
+picks its physical plan by the graph's size (Pregelix's argument, in its
+smallest form). One limited Arrow pull (``components.pull_or_checkpoint``)
+both checks the edge count against the driver memory budget and
+collects the edges; a graph of at most ``DRIVER_CC_MEM_BUDGET /
+DRIVER_PR_EDGE_BYTES`` directed edges (the bytes-per-edge constant is
+measured peak driver RSS) is solved in numpy on the driver in one Spark
+job, a larger one by the distributed join loop. Both plans compute the
+same integers. The other operators here always run distributed.
 """
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from opencypher_datalayer_spark.operators import components
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 # 1e9 fixed-point: total rank mass is n_nodes * SCALE and the damping
 # step multiplies a node's in-mass by 85 before dividing — 1e9 keeps
@@ -22,6 +39,16 @@ from pyspark.sql import functions as F
 PR_SCALE = 1_000_000_000
 PR_DAMPING_NUM = 85  # damping 0.85 as an exact integer ratio
 PR_DAMPING_DEN = 100
+PR_TELEPORT = (PR_DAMPING_DEN - PR_DAMPING_NUM) * PR_SCALE // PR_DAMPING_DEN
+# Driver-path memory model of PageRank (measured with
+# `scripts/bench_cc_rss.py --pagerank`, table in SCALE.md §cc-handover):
+# peak driver RSS grows at ~300 B per directed edge with string gids
+# (308 / 293 B at 1M / 4M edges, nodes ~= 0.55x edges), above CC's 200 B
+# per long-id edge. Rounded up to 400 B because each node carries its
+# gid string and ~5 more 8-byte cells, so a node-heavy graph (a chain:
+# nodes ~= edges) costs more per edge. The path shares CC's budget,
+# DRIVER_CC_MEM_BUDGET (4 GiB: ~10.7M directed edges).
+DRIVER_PR_EDGE_BYTES = 400
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -92,32 +119,44 @@ def pagerank_fixedpoint(
       contrib(v)   = floor(rank(u) / out_degree(u)) summed over in-edges
       rank'(v)     = floor((1-d)*SCALE) + floor(d * contribs / 100)
     Dangling-node mass is dropped (standard simplified variant) and
-    nodes with no in-edges hold the teleport term only.
+    nodes with no in-edges hold the teleport term only. Duplicate edges
+    count: each adds to its source's out-degree and carries a share.
 
-    Returns (id, rank) with rank still in fixed-point scale. Each
-    iteration is one shuffle join edges x ranks + one aggregation; the
-    loop is driver-side control flow with lineage cut per round. The
-    annotated edge list and the vertex set are pre-partitioned on their
-    join keys ONCE — across iterations the (large) edge side never
-    moves again, only the rank frame shuffles (measured 1.8 s -> 1.5 s
-    at sf0.1; the gap widens with edge-to-vertex ratio).
+    Returns (id, rank) with rank still in fixed-point scale; ``id`` has
+    the type of ``src``.
+
+    The physical plan is chosen by the graph's size. The ``(src, dst)``
+    list is pulled to the driver in one limited Arrow collect
+    (``components.pull_or_checkpoint``) while it fits the driver memory
+    budget: ``edges x DRIVER_PR_EDGE_BYTES <= DRIVER_CC_MEM_BUDGET``.
+    There the recurrence runs in numpy on int64 (:func:`_driver_pagerank`)
+    and the result is a driver-built frame: one Spark job, where the
+    distributed loop runs 12 for two iterations on the served graph.
+    A budget of 0 sends every graph to the distributed loop.
+
+    Over budget the pulled list is checkpointed once and the loop runs
+    in Spark: each iteration is one shuffle join edges x ranks + one
+    aggregation, driver-side control flow with the lineage n_iter joins
+    deep. The annotated edge list and the vertex set are pre-partitioned
+    on their join keys ONCE — across iterations the (large) edge side
+    never moves again, only the rank frame shuffles (measured 1.8 s ->
+    1.5 s at sf0.1; the gap widens with edge-to-vertex ratio).
     """
+    pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    cap = components.DRIVER_CC_MEM_BUDGET // DRIVER_PR_EDGE_BYTES
+    pdf, pairs = components.pull_or_checkpoint(pairs, cap)
+    if pdf is not None:
+        return _driver_pagerank(pairs, pdf, n_iter)
     verts = (
-        edges.select(F.col(src).alias("id"))
-        .union(edges.select(F.col(dst).alias("id")))
+        pairs.select(F.col("u").alias("id"))
+        .union(pairs.select(F.col("v").alias("id")))
         .dropDuplicates()
         .repartition("id")
         .localCheckpoint()
     )
-    out_deg = edges.groupBy(F.col(src).alias("id")).agg(F.count("*").alias("deg"))
+    out_deg = pairs.groupBy(F.col("u")).agg(F.count("*").alias("deg"))
     # edge list annotated with source out-degree, reused every round
-    ed = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .join(out_deg.withColumnRenamed("id", "u"), "u")
-        .repartition("u")
-        .localCheckpoint()
-    )
-    teleport = (PR_DAMPING_DEN - PR_DAMPING_NUM) * PR_SCALE // PR_DAMPING_DEN
+    ed = pairs.join(out_deg, "u").repartition("u").localCheckpoint()
 
     ranks = verts.withColumn("rank", F.lit(PR_SCALE).cast("bigint"))
     for _ in range(n_iter):
@@ -138,7 +177,7 @@ def pagerank_fixedpoint(
         ).select(
             "id",
             (
-                F.lit(teleport)
+                F.lit(PR_TELEPORT)
                 + F.expr(
                     f"(coalesce(contribs, 0L) * {PR_DAMPING_NUM}) div {PR_DAMPING_DEN}"
                 )
@@ -149,6 +188,35 @@ def pagerank_fixedpoint(
         # lineage is only n_iter joins deep — shallow for typical
         # iteration counts. Checkpoint outside if n_iter is large.
     return ranks
+
+
+def _driver_pagerank(pairs: DataFrame, pdf: pd.DataFrame, n_iter: int) -> DataFrame:
+    """The fixed-point recurrence over the collected ``(u, v)`` list, in
+    numpy on int64 — the same integers as the distributed loop. Ids map
+    to dense ranks through ``np.unique``; out-degree is a ``bincount``
+    and each round's contributions an ``np.add.at`` (float ``bincount``
+    weights would lose exactness past 2^53). ``pairs`` supplies the
+    session and the id type only."""
+    import numpy as np
+    import pandas as pd
+
+    schema = f"id {pairs.schema['u'].dataType.simpleString()}, rank bigint"
+    if len(pdf) == 0:
+        return pairs.sparkSession.createDataFrame([], schema)
+    m = len(pdf)
+    ids, inv = np.unique(
+        np.concatenate([pdf["u"].to_numpy(), pdf["v"].to_numpy()]), return_inverse=True
+    )
+    u, v = inv[:m], inv[m:]
+    deg_u = np.bincount(u)[u]
+    rank = np.full(len(ids), PR_SCALE, dtype=np.int64)
+    for _ in range(n_iter):
+        contribs = np.zeros(len(ids), dtype=np.int64)
+        np.add.at(contribs, v, rank[u] // deg_u)
+        rank = PR_TELEPORT + contribs * PR_DAMPING_NUM // PR_DAMPING_DEN
+    return pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids, "rank": rank}), schema
+    )
 
 
 def label_propagation(

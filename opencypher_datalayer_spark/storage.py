@@ -140,6 +140,20 @@ def _log_put(log_dir: str, v: int, dirname: str) -> bool:
     return _put_if_absent(_log_path(log_dir, v), json.dumps({"version": v, "dir": dirname}))
 
 
+# An unpublished data dir younger than this may be a live writer's build
+# in progress, so orphan collection leaves it alone.
+ORPHAN_MIN_AGE_S = 3600.0
+
+
+def _aged(path: str, min_age_s: float) -> bool:
+    """True when ``path`` is a directory last modified ``min_age_s`` ago
+    or earlier."""
+    try:
+        return os.path.isdir(path) and time.time() - os.stat(path).st_mtime >= min_age_s
+    except OSError:
+        return False
+
+
 def _link_or_copy(src: str, dst: str) -> None:
     """Hard-link an immutable data file into a new snapshot (zero data
     movement); plain copy when the paths sit on different filesystems."""
@@ -662,7 +676,7 @@ class ParquetGraphStorage:
             os.unlink(_log_path(self._log, v))
             self._dir_cache.pop(v, None)
 
-    def gc_orphans(self, min_age_s: float = 3600.0) -> list[str]:
+    def gc_orphans(self, min_age_s: float = ORPHAN_MIN_AGE_S) -> list[str]:
         """Remove ``d-<uuid>`` data directories referenced by NO log
         entry — the residue of a writer killed between its (expensive)
         data write and the (cheap) log put, or of a lost merge race
@@ -683,18 +697,11 @@ class ParquetGraphStorage:
         version. Returns the removed directory names."""
         referenced = {_log_entry_dir(self._log, v) for v in _log_slots(self._log)}
         removed: list[str] = []
-        now = time.time()
         for name in os.listdir(self.root):
-            if not name.startswith("d-") or name in referenced:
-                continue
             path = os.path.join(self.root, name)
-            try:
-                if not os.path.isdir(path) or now - os.stat(path).st_mtime < min_age_s:
-                    continue
-            except OSError:
-                continue
-            shutil.rmtree(path, ignore_errors=True)
-            removed.append(name)
+            if name.startswith("d-") and name not in referenced and _aged(path, min_age_s):
+                shutil.rmtree(path, ignore_errors=True)
+                removed.append(name)
         return removed
 
 

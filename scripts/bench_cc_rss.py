@@ -1,12 +1,16 @@
-"""Driver-RSS measurement for the connected-components driver path
+"""Driver-RSS measurement for the graph operators' driver paths
 (VERDICT r6 #2): collect N-edge frames through the Arrow driver path
 and record peak RSS delta + wall time, so the driver/distributed
 handover threshold is derived from a measured bytes-per-edge figure
 against a memory budget — not a fixed edge count.
 
-Usage: python scripts/bench_cc_rss.py [edge_counts ...]
-Each size runs in a fresh subprocess so ru_maxrss (a high-water mark)
-is not polluted by earlier sizes. Prints one JSON line per size.
+Usage: python scripts/bench_cc_rss.py [--pagerank] [edge_counts ...]
+Default: connected components over long ids (bytes per symmetrized
+edge). ``--pagerank``: fixed-point PageRank (2 iterations) over string
+gids of the served graph's shape (``http://data.sample.org/people/<n>``),
+bytes per directed edge. Each size runs in a fresh subprocess so
+ru_maxrss (a high-water mark) is not polluted by earlier sizes. Prints
+one JSON line per size.
 """
 
 import json
@@ -19,10 +23,13 @@ import time
 sys.path.insert(0, ".")
 
 
-def _child(n_edges: int) -> None:
+GID_PREFIX = "http://data.sample.org/people/"
+
+
+def _child(n_edges: int, pagerank: bool) -> None:
     from pyspark.sql import functions as F
 
-    from opencypher_datalayer_spark.operators import components
+    from opencypher_datalayer_spark.operators import components, graph_algorithms
     from opencypher_datalayer_spark.session import get_spark
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__)))
@@ -30,17 +37,26 @@ def _child(n_edges: int) -> None:
 
     spark = get_spark(app_name="cc_rss")
     edges = edge_frame(spark, n_edges)
+    if pagerank:
+        edges = edges.select(
+            *(F.concat(F.lit(GID_PREFIX), F.col(c).cast("string")).alias(c) for c in ("src", "dst"))
+        ).localCheckpoint()
     n_real = edges.count()
     rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss * 1024
     t0 = time.perf_counter()
-    # threshold counts SYMMETRIZED deduped edges (~2x the input frame)
-    out = components.connected_components(edges, driver_threshold=2 * n_real + 1)
+    if pagerank:
+        assert n_real <= components.DRIVER_CC_MEM_BUDGET // graph_algorithms.DRIVER_PR_EDGE_BYTES
+        out = graph_algorithms.pagerank_fixedpoint(edges, n_iter=2)
+    else:
+        # threshold counts SYMMETRIZED deduped edges (~2x the input frame)
+        out = components.connected_components(edges, driver_threshold=2 * n_real + 1)
     n_out = out.count()
     wall = time.perf_counter() - t0
     rss1 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss * 1024
     print(
         json.dumps(
             {
+                "op": "pagerank" if pagerank else "components",
                 "n_edges": n_real,
                 "n_nodes": n_out,
                 "wall_s": round(wall, 2),
@@ -55,11 +71,15 @@ def _child(n_edges: int) -> None:
 
 def main() -> None:
     if os.environ.get("_CC_RSS_CHILD"):
-        _child(int(os.environ["_CC_RSS_CHILD"]))
+        _child(int(os.environ["_CC_RSS_CHILD"]), os.environ.get("_CC_RSS_OP") == "pagerank")
         return
-    sizes = [int(a) for a in sys.argv[1:]] or [2_000_000, 4_000_000, 8_000_000]
+    args = sys.argv[1:]
+    pagerank = "--pagerank" in args
+    sizes = [int(a) for a in args if a != "--pagerank"] or (
+        [1_000_000, 4_000_000] if pagerank else [2_000_000, 4_000_000, 8_000_000]
+    )
     for n in sizes:
-        env = dict(os.environ, _CC_RSS_CHILD=str(n))
+        env = dict(os.environ, _CC_RSS_CHILD=str(n), _CC_RSS_OP="pagerank" if pagerank else "")
         subprocess.run([sys.executable, __file__], env=env, check=True)
 
 

@@ -6,9 +6,11 @@ extenders can never silently drop a delta)."""
 import json
 import os
 import threading
+import time
 
 import pytest
 
+from opencypher_datalayer_spark import storage
 from opencypher_datalayer_spark.operators import artifacts
 from opencypher_datalayer_spark.operators.artifacts import ArtifactStore, ExtensionConflict
 
@@ -111,12 +113,12 @@ def test_crashed_build_leaves_no_current_and_sweeps(store):
     assert os.listdir(store._adir("sets", key)) == ["KEY.json"]  # the build dir went
     # a dead-pid build dir (simulated crashed process) is reclaimed
     adir = store._adir("sets", key)
-    dead = os.path.join(adir, "d-deadbeef_p999999999")
+    dead = os.path.join(adir, f"d-deadbeef_{artifacts._HOST}_p999999999")
     os.makedirs(dead)
     removed = store.sweep()
     assert dead in removed and not os.path.isdir(dead)
     # a LIVE process's build dir is never touched
-    live = os.path.join(adir, f"d-cafebabe_p{os.getpid()}")
+    live = os.path.join(adir, f"d-cafebabe_{artifacts._HOST}_p{os.getpid()}")
     os.makedirs(live)
     assert live not in store.sweep() and os.path.isdir(live)
 
@@ -285,8 +287,28 @@ def test_txnlog_sweep_reclaims_orphan_data_dir(tmp_path):
     key = (("fp", 14),)
     v1 = store.commit("sets", key, _writer({"v": 1}))
     adir = store._adir("sets", key)
-    orphan = os.path.join(adir, "d-deadbeef_p999999999")
+    orphan = os.path.join(adir, f"d-deadbeef_{artifacts._HOST}_p999999999")
     os.makedirs(orphan)
     removed = store.sweep()
     assert orphan in removed and not os.path.isdir(orphan)
     assert os.path.isdir(v1) and store.current_dir("sets", key) == v1
+
+
+def test_sweep_keeps_another_hosts_build_until_it_ages(tmp_path):
+    """On a root shared by two hosts a pid names a process only on the
+    host that wrote the dir. Another host's in-flight build survives
+    ``sweep`` although its pid is not alive here, and so does an
+    untagged dir; both are reclaimed once older than the orphan age."""
+    store = ArtifactStore(str(tmp_path))
+    key = (("fp", 15),)
+    store.commit("sets", key, _writer({"v": 1}))
+    adir = store._adir("sets", key)
+    other = os.path.join(adir, f"d-feedface_not-{artifacts._HOST}_p999999999")
+    untagged = os.path.join(adir, "d-0ddba11_p999999999")
+    for d in (other, untagged):
+        os.makedirs(d)
+    assert store.sweep() == [] and os.path.isdir(other) and os.path.isdir(untagged)
+    old = time.time() - storage.ORPHAN_MIN_AGE_S - 60
+    for d in (other, untagged):
+        os.utime(d, (old, old))
+    assert sorted(store.sweep()) == sorted([other, untagged])

@@ -58,3 +58,40 @@ def test_self_loop_and_duplicates(spark):
 def test_star_and_reversed_ids(spark):
     # min id at the leaf side; labels must flow against edge direction too
     _run(spark, [(100, 1), (100, 2), (100, 3)])
+
+
+def test_over_budget_computes_the_edge_subtree_once(spark):
+    """Over budget, the limited pull and the distributed loop share one
+    computation of the symmetrized, deduplicated edge list: every input
+    row passes through it once, and the call's job count stays pinned.
+    A pull that is thrown away before a checkpoint recomputes the
+    subtree: that doubles the call count below and takes 73 jobs."""
+    from pyspark.sql import functions as F
+
+    edges = [(i, i + 1) for i in range(1, 41)]
+    seen = spark.sparkContext.accumulator(0)
+
+    # nondeterministic: the optimizer may not copy the call into the
+    # symmetrizing union's filter, so one pass over the subtree is two
+    # calls per input row (one per direction)
+    @F.udf("long")
+    def tick(x):
+        seen.add(1)
+        return x
+
+    tick = tick.asNondeterministic()
+
+    df = spark.createDataFrame(edges, "src: long, dst: long").select(
+        tick("src").alias("src"), "dst"
+    )
+    sc = spark.sparkContext
+    group = "cc-over-budget-job-count"
+    sc.setJobGroup(group, "connected_components over budget")
+    try:
+        got = {r["id"]: r["comp"] for r in connected_components(df, driver_threshold=5).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert got == _bfs_components(edges)
+    assert seen.value == 2 * len(edges), seen.value
+    assert jobs <= 71, jobs

@@ -1,5 +1,10 @@
 """Graph analytics operators vs pure-Python references."""
 
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
+from opencypher_datalayer_spark.operators import components, graph_algorithms
 from opencypher_datalayer_spark.operators.graph_algorithms import (
     PR_DAMPING_DEN,
     PR_DAMPING_NUM,
@@ -9,8 +14,11 @@ from opencypher_datalayer_spark.operators.graph_algorithms import (
 )
 
 
+_LONG_EDGES = "src: long, dst: long"
+
+
 def _edges_df(spark, edges):
-    return spark.createDataFrame(edges, "src: long, dst: long")
+    return spark.createDataFrame(edges, _LONG_EDGES)
 
 
 def test_triangle_k4(spark):
@@ -62,6 +70,69 @@ def test_pagerank_dangling_and_no_inedge(spark):
     assert got == _py_pagerank(edges, 4)
     teleport = (PR_DAMPING_DEN - PR_DAMPING_NUM) * PR_SCALE // PR_DAMPING_DEN
     assert got[1] == teleport  # teleport-only
+
+
+def _ranks(df, n_iter):
+    return {r["id"]: r["rank"] for r in pagerank_fixedpoint(df, n_iter=n_iter).collect()}
+
+
+# a small vertex range, so random edge lists carry self-loops, duplicate
+# edges and dangling vertices (no out-edges) in most examples
+_pr_edges = st.lists(st.tuples(st.integers(0, 6), st.integers(0, 6)), max_size=16)
+
+
+@settings(
+    # each example runs the distributed loop (~1-2 s); the explicit
+    # examples cover the listed edge cases on every run
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(edges=_pr_edges, str_ids=st.booleans(), n_iter=st.integers(1, 3))
+@example(edges=[], str_ids=False, n_iter=2)
+@example(edges=[], str_ids=True, n_iter=1)
+@example(edges=[(0, 0), (0, 1), (0, 1), (1, 2), (3, 2)], str_ids=True, n_iter=3)
+@example(edges=[(5, 5)], str_ids=False, n_iter=2)
+def test_pagerank_driver_and_distributed_paths_agree(spark, edges, str_ids, n_iter):
+    """Under the driver budget PageRank runs the integer recurrence in
+    numpy; with a budget of 0 it runs the distributed loop. Both give
+    the same integers as the pure-Python recurrence, for int and string
+    ids alike."""
+    if str_ids:
+        edges = [(f"v{a}", f"v{b}") for a, b in edges]
+    df = spark.createDataFrame(edges, "src string, dst string" if str_ids else _LONG_EDGES)
+    calls = []
+    driver_pagerank = graph_algorithms._driver_pagerank
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            graph_algorithms,
+            "_driver_pagerank",
+            lambda *a: calls.append(1) or driver_pagerank(*a),
+        )
+        on_driver = _ranks(df, n_iter)
+        assert calls == [1]
+        mp.setattr(components, "DRIVER_CC_MEM_BUDGET", 0)
+        distributed = _ranks(df, n_iter)
+        assert calls == [1]
+    assert on_driver == distributed == _py_pagerank(edges, n_iter)
+
+
+def test_pagerank_under_budget_job_count_is_pinned(spark):
+    """Under the driver budget PageRank is one limited Arrow pull and a
+    driver-built frame; the distributed loop takes 13 jobs on this
+    graph. Counted in a job group of its own, like the merge's pin."""
+    edges = [(i % 50, (i * 7 + 3) % 50) for i in range(400)]
+    df = spark.createDataFrame(edges, _LONG_EDGES).repartition(4).localCheckpoint()
+    sc = spark.sparkContext
+    group = "pagerank-job-count"
+    sc.setJobGroup(group, "pagerank_fixedpoint job count")
+    try:
+        got = _ranks(df, 4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 2, jobs
+    assert got == _py_pagerank(edges, 4)
 
 
 def test_bfs_chain_and_bound(spark):

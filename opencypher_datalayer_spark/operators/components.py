@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
-    import pandas as pd
+    import pyarrow as pa
 
 # Driver-path memory model (measured, scripts/bench_cc_rss.py; table in
 # SCALE.md §cc-handover): the Arrow-collected numpy path's peak driver
@@ -54,35 +54,27 @@ DRIVER_CC_MEM_BUDGET = int(
 
 def driver_edge_budget() -> int:
     """Max deduped (symmetrized) edges admitted to the driver path:
-    the memory budget divided by the measured per-edge footprint. A
-    budget of 0 admits none."""
-    return DRIVER_CC_MEM_BUDGET // DRIVER_CC_EDGE_BYTES
+    the memory budget divided by the measured per-edge footprint."""
+    return max(1, DRIVER_CC_MEM_BUDGET // DRIVER_CC_EDGE_BYTES)
 
 
-def pull_or_checkpoint(df: DataFrame, cap: int) -> tuple[pd.DataFrame | None, DataFrame]:
+def pull_or_checkpoint(df: DataFrame, cap: int) -> tuple[pa.Table | None, DataFrame]:
     """The size gate of the graph operators: ``(rows, df)`` when ``df``
-    has at most ``cap`` rows, ``rows`` being all of it as pandas, else
-    ``(None, checkpoint)`` with ``df`` materialized by a local
-    checkpoint for a distributed loop. ``cap`` 0 skips the pull.
+    has at most ``cap`` rows, ``rows`` being all of it as an Arrow
+    table, else ``(None, checkpoint)`` with ``df`` materialized by a
+    local checkpoint for a distributed loop. ``cap`` 0 skips the pull.
 
     The budget check and the collect are FUSED into one limited Arrow
     pull: at most ``cap`` rows back means the limit never truncated, so
     the driver path pays one pass over ``df`` instead of three
-    (checkpoint + count + collect). The pull reads a LAZY local
-    checkpoint of ``df``: marking it runs ``df``'s upstream shuffle (a
-    job the pull runs anyway), the pull's job stores every partition it
-    computes, and Spark computes the rest once that job ends. So over
-    budget the returned checkpoint is ``df`` computed exactly once, and
-    under budget the pull runs the same jobs a plain limited collect
-    would; its price there is the mark's planning and block writes,
-    ~30-60 ms per call on a 4-core host at 15k edges."""
-    if cap <= 0:
-        return None, df.localCheckpoint()
-    checkpoint = df.localCheckpoint(eager=False)
-    rows = checkpoint.limit(cap + 1).toPandas()
-    if len(rows) <= cap:
-        return rows, df
-    return None, checkpoint
+    (checkpoint + count + collect). Over budget the pulled rows are
+    dropped and the checkpoint computes ``df`` again (ROADMAP known
+    defect); no served graph is over budget."""
+    if cap > 0:
+        rows = df.limit(cap + 1).toArrow()
+        if rows.num_rows <= cap:
+            return rows, df
+    return None, df.localCheckpoint()
 
 
 def connected_components(
@@ -107,9 +99,8 @@ def connected_components(
     is ~10 s of fixed job overhead (3-4 rounds x 4 jobs) regardless of
     size. The check and the collect are one limited Arrow pull,
     :func:`pull_or_checkpoint`, the gate ``pagerank_fixedpoint`` shares
-    with its own per-edge constant. Over budget that pull's computation
-    of the edge list is kept as the distributed loop's checkpoint, so
-    the symmetrize + dedup subtree runs once. ``driver_threshold``
+    with its own edge cap; over budget the edge list is checkpointed
+    for the distributed loop. ``driver_threshold``
     overrides the derived edge cap (0 forces the distributed loop —
     the over-budget path for graphs that genuinely cannot collect).
 
@@ -128,9 +119,9 @@ def connected_components(
     )
 
     cap = driver_edge_budget() if driver_threshold is None else driver_threshold
-    pdf, und = pull_or_checkpoint(und, cap)
-    if pdf is not None:
-        return _driver_union_find(und, pdf)
+    rows, und = pull_or_checkpoint(und, cap)
+    if rows is not None:
+        return _driver_union_find(und, rows)
     labels = (
         und.select(F.col("a").alias("id"))
         .dropDuplicates()
@@ -169,12 +160,12 @@ def connected_components(
     return labels
 
 
-def _driver_union_find(und: DataFrame, pdf: pd.DataFrame) -> DataFrame:
-    """Driver-local components over the collected edge list ``pdf``
+def _driver_union_find(und: DataFrame, rows: pa.Table) -> DataFrame:
+    """Driver-local components over the collected edge list ``rows``
     (``und`` supplies the session and output schema only); same output
     contract (min reachable id per node) as the distributed loop.
     Columnar end-to-end: the edges arrive as ONE Arrow transfer
-    (``toPandas``, no per-Row Python objects), ids are mapped to dense
+    (``toArrow``, no per-Row Python objects), ids are mapped to dense
     ranks with ``np.unique`` (sorted, so rank order == id order and
     the min-rank root IS the min-id component label), and labels
     converge by vectorized min propagation — ``np.minimum.at`` per
@@ -189,10 +180,10 @@ def _driver_union_find(und: DataFrame, pdf: pd.DataFrame) -> DataFrame:
         f"id {und.schema['a'].dataType.simpleString()}, "
         f"comp {und.schema['b'].dataType.simpleString()}"
     )
-    if len(pdf) == 0:
+    if rows.num_rows == 0:
         return spark.createDataFrame([], out_schema)
-    a = pdf["a"].to_numpy()
-    b = pdf["b"].to_numpy()
+    a = rows.column("a").to_numpy()
+    b = rows.column("b").to_numpy()
     uniq, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
     ea, eb = inv[: len(a)], inv[len(a) :]
     label = np.arange(len(uniq))

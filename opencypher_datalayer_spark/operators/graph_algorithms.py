@@ -12,12 +12,15 @@ full value-level DuckDB oracle possible for an iterative algorithm.
 Size-gated plans: PageRank, like ``components.connected_components``,
 picks its physical plan by the graph's size (Pregelix's argument, in its
 smallest form). One limited Arrow pull (``components.pull_or_checkpoint``)
-both checks the edge count against the driver memory budget and
-collects the edges; a graph of at most ``DRIVER_CC_MEM_BUDGET /
-DRIVER_PR_EDGE_BYTES`` directed edges (the bytes-per-edge constant is
-measured peak driver RSS) is solved in numpy on the driver in one Spark
-job, a larger one by the distributed join loop. Both plans compute the
-same integers. The other operators here always run distributed.
+both checks the edge count against a cap and collects the edges. The
+cap (:func:`pagerank_driver_cap`) is the lower of two measured bounds:
+the driver memory budget over the measured peak driver bytes per edge
+(``DRIVER_CC_MEM_BUDGET / DRIVER_PR_EDGE_BYTES``) and the largest graph
+at which the driver plan was timed faster than the distributed loop
+(``DRIVER_PR_MAX_EDGES``). A graph under the cap is solved in numpy on
+the driver in one Spark job, a larger one by the distributed join loop.
+Both plans compute the same integers. The other operators here always
+run distributed.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ from pyspark.sql import functions as F
 from opencypher_datalayer_spark.operators import components
 
 if TYPE_CHECKING:
-    import pandas as pd
+    import pyarrow as pa
 
 # 1e9 fixed-point: total rank mass is n_nodes * SCALE and the damping
 # step multiplies a node's in-mass by 85 before dividing — 1e9 keeps
@@ -40,15 +43,24 @@ PR_SCALE = 1_000_000_000
 PR_DAMPING_NUM = 85  # damping 0.85 as an exact integer ratio
 PR_DAMPING_DEN = 100
 PR_TELEPORT = (PR_DAMPING_DEN - PR_DAMPING_NUM) * PR_SCALE // PR_DAMPING_DEN
-# Driver-path memory model of PageRank (measured with
-# `scripts/bench_cc_rss.py --pagerank`, table in SCALE.md §cc-handover):
-# peak driver RSS grows at ~300 B per directed edge with string gids
-# (308 / 293 B at 1M / 4M edges, nodes ~= 0.55x edges), above CC's 200 B
-# per long-id edge. Rounded up to 400 B because each node carries its
-# gid string and ~5 more 8-byte cells, so a node-heavy graph (a chain:
-# nodes ~= edges) costs more per edge. The path shares CC's budget,
-# DRIVER_CC_MEM_BUDGET (4 GiB: ~10.7M directed edges).
-DRIVER_PR_EDGE_BYTES = 400
+# Driver-path model of PageRank (`scripts/bench_cc_rss.py --pagerank`,
+# table in SCALE.md §cc-handover; string gids, nodes ~= 0.55x edges,
+# 4 cores). Memory: peak driver RSS grows at ~175 B per directed edge
+# (179 / 171 B at 1M / 4M edges), rounded up to 300 B because each node
+# carries its gid in the Arrow id column and ~4 int64 cells, so a
+# node-heavy graph (a chain: nodes ~= edges) costs more per edge; the
+# path shares CC's budget, DRIVER_CC_MEM_BUDGET. Time: the driver plan
+# beat the distributed loop at every size timed, up to 8M edges (1.9x,
+# 2.7x and 3.4x faster at 1M, 4M and 8M edges for 2 iterations), so
+# the cap stops there until a larger graph is timed.
+DRIVER_PR_EDGE_BYTES = 300
+DRIVER_PR_MAX_EDGES = 8_000_000
+
+
+def pagerank_driver_cap() -> int:
+    """Max directed edges admitted to PageRank's driver path: the lower
+    of the memory bound and the timed range."""
+    return min(components.DRIVER_CC_MEM_BUDGET // DRIVER_PR_EDGE_BYTES, DRIVER_PR_MAX_EDGES)
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -127,26 +139,29 @@ def pagerank_fixedpoint(
 
     The physical plan is chosen by the graph's size. The ``(src, dst)``
     list is pulled to the driver in one limited Arrow collect
-    (``components.pull_or_checkpoint``) while it fits the driver memory
-    budget: ``edges x DRIVER_PR_EDGE_BYTES <= DRIVER_CC_MEM_BUDGET``.
+    (``components.pull_or_checkpoint``) while it has at most
+    :func:`pagerank_driver_cap` edges: the memory bound ``edges x
+    DRIVER_PR_EDGE_BYTES <= DRIVER_CC_MEM_BUDGET``, and no more than the
+    ``DRIVER_PR_MAX_EDGES`` up to which the driver plan was timed faster.
     There the recurrence runs in numpy on int64 (:func:`_driver_pagerank`)
     and the result is a driver-built frame: one Spark job, where the
     distributed loop runs 12 for two iterations on the served graph.
     A budget of 0 sends every graph to the distributed loop.
 
-    Over budget the pulled list is checkpointed once and the loop runs
-    in Spark: each iteration is one shuffle join edges x ranks + one
-    aggregation, driver-side control flow with the lineage n_iter joins
-    deep. The annotated edge list and the vertex set are pre-partitioned
-    on their join keys ONCE — across iterations the (large) edge side
-    never moves again, only the rank frame shuffles (measured 1.8 s ->
-    1.5 s at sf0.1; the gap widens with edge-to-vertex ratio).
+    Over the cap the pulled rows are dropped, the edge list is
+    checkpointed and the loop runs in Spark: each iteration is one
+    shuffle join edges x ranks + one aggregation, driver-side control
+    flow with the lineage n_iter joins deep. The annotated edge list
+    and the vertex set are pre-partitioned on their join keys ONCE —
+    across iterations the (large) edge side never moves again, only the
+    rank frame shuffles (measured 1.8 s -> 1.5 s at sf0.1; the gap
+    widens with edge-to-vertex ratio).
     """
     pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    cap = components.DRIVER_CC_MEM_BUDGET // DRIVER_PR_EDGE_BYTES
-    pdf, pairs = components.pull_or_checkpoint(pairs, cap)
-    if pdf is not None:
-        return _driver_pagerank(pairs, pdf, n_iter)
+    cap = pagerank_driver_cap()
+    rows, pairs = components.pull_or_checkpoint(pairs, cap)
+    if rows is not None:
+        return _driver_pagerank(pairs, rows, n_iter)
     verts = (
         pairs.select(F.col("u").alias("id"))
         .union(pairs.select(F.col("v").alias("id")))
@@ -190,23 +205,27 @@ def pagerank_fixedpoint(
     return ranks
 
 
-def _driver_pagerank(pairs: DataFrame, pdf: pd.DataFrame, n_iter: int) -> DataFrame:
-    """The fixed-point recurrence over the collected ``(u, v)`` list, in
+def _driver_pagerank(pairs: DataFrame, rows: pa.Table, n_iter: int) -> DataFrame:
+    """The fixed-point recurrence over the collected ``(u, v)`` table, in
     numpy on int64 — the same integers as the distributed loop. Ids map
-    to dense ranks through ``np.unique``; out-degree is a ``bincount``
-    and each round's contributions an ``np.add.at`` (float ``bincount``
-    weights would lose exactness past 2^53). ``pairs`` supplies the
-    session and the id type only."""
+    to dense indexes in Arrow (``pc.unique`` + ``pc.index_in``, hash
+    passes in C++, so string gids never become Python objects); the
+    out-degree is a ``bincount`` and each round's contributions an
+    ``np.add.at`` (float ``bincount`` weights would lose exactness past
+    2^53). ``pairs`` supplies the session and the id type only."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
+    spark = pairs.sparkSession
     schema = f"id {pairs.schema['u'].dataType.simpleString()}, rank bigint"
-    if len(pdf) == 0:
-        return pairs.sparkSession.createDataFrame([], schema)
-    m = len(pdf)
-    ids, inv = np.unique(
-        np.concatenate([pdf["u"].to_numpy(), pdf["v"].to_numpy()]), return_inverse=True
-    )
+    if rows.num_rows == 0:
+        return spark.createDataFrame([], schema)
+    m = rows.num_rows
+    u_col, v_col = rows.column("u"), rows.column("v")
+    both = pa.chunked_array(u_col.chunks + v_col.chunks, type=u_col.type)
+    ids = pc.unique(both)
+    inv = pc.index_in(both, value_set=ids).to_numpy()
     u, v = inv[:m], inv[m:]
     deg_u = np.bincount(u)[u]
     rank = np.full(len(ids), PR_SCALE, dtype=np.int64)
@@ -214,9 +233,7 @@ def _driver_pagerank(pairs: DataFrame, pdf: pd.DataFrame, n_iter: int) -> DataFr
         contribs = np.zeros(len(ids), dtype=np.int64)
         np.add.at(contribs, v, rank[u] // deg_u)
         rank = PR_TELEPORT + contribs * PR_DAMPING_NUM // PR_DAMPING_DEN
-    return pairs.sparkSession.createDataFrame(
-        pd.DataFrame({"id": ids, "rank": rank}), schema
-    )
+    return spark.createDataFrame(pa.table({"id": ids, "rank": rank}), schema)
 
 
 def label_propagation(
